@@ -1,22 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      // production wiring: the timing run prices the deployment guards
-      // (warn mode) the way a real session pays them (round 18 — before
-      // this, the bench silently measured a guard-free planner)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.create("graft-bench")
     // warm the JVM/codegen/scan paths once so the first measured query
     // doesn't absorb session start-up; not counted in the metric. The
     // dedup queries are dominated by the tight-loop hashing UDFs, which
@@ -41,10 +28,6 @@ object Bench {
       operators.Dedup.minHashLsh(sample, "doc_id", "text", 3, 16, 4, 0.5).count()
       operators.TrainingPrep.prepare(sample, "doc_id", "text", 30, 90, "en").count()
     } catch { case _: Throwable => () }
-    import scala.jdk.CollectionConverters._
-    def gcMillis: Long = java.lang.management.ManagementFactory
-      .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
-    val gcDebug = sys.env.contains("SPARK_GRAFT_GC_DEBUG")
     // debug: SPARK_GRAFT_QUERIES=q17,q20 runs just those (prefix match),
     // in sorted order — for isolating sequence-position effects
     val only = sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(",").toSeq)
@@ -58,7 +41,6 @@ object Bench {
     // passes land in target/bench.json for transparency.
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt)
     def onePass(pass: Int): Seq[(String, Double, Boolean)] = selected.map { case (name, fn) =>
-      val g0 = gcMillis
       val t0 = System.nanoTime()
       // toRdd.count(), not count(): Dataset.count() lets Catalyst prune
       // every column, so projection-only queries would be timed as bare
@@ -71,26 +53,10 @@ object Bench {
           false
         }
       val sec = (System.nanoTime() - t0) / 1e9
-      // OUTSIDE the timed window: drop this query's cached relations
-      // (operators persist multi-consumer intermediates — TfIdf/NgramLm/
-      // Skew since r21). Without this the entries accumulate across the
-      // 175-query roster and later queries pay CacheManager plan-matching
-      // against hundreds of stale plans plus storage-eviction churn
-      // (measured: q120 2.7 s isolated vs 5.0 s late in a polluted
-      // session). Each query is measured from clean session state — the
-      // r20 methodology, where operators held no session caches at all.
-      spark.sharedState.cacheManager.clearCache()
-      // ... and raw RDD persists too (r22): clearCache() only drops
-      // DataFrame cache entries, not RDD-level persists (operator-
-      // internal loops, localCheckpoint blocks) — without this a single
-      // leaked persist pollutes the block manager for the remaining
-      // ~350 query executions (r21: one leaked CC labels RDD inflated
-      // 28 unrelated queries by 20-380% at local[32])
-      // blocking: the removal work must land HERE, in the untimed gap,
-      // not asynchronously inside the next query's timed window
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      if (gcDebug)
-        System.err.println(f"[gc] p$pass $name%-28s ${sec}%6.2f s  gc=${gcMillis - g0} ms")
+      // OUTSIDE the timed window, blocking so the removal lands in the
+      // untimed gap and not inside the next query's timed window: each
+      // query is measured from clean session state
+      GraftSession.releaseCaches(spark)
       (name, sec, ok)
     }
     val passes: Seq[Seq[(String, Double, Boolean)]] = (1 to reps).map(onePass)

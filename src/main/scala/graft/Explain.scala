@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes `EXPLAIN.md`: the formatted physical plan of EVERY registry
   * query at the given scale factor — the plan-quality evidence
   * (pushdown, pruning, broadcast choices, exchange keys, codegen spans)
@@ -15,15 +13,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("EXPLAIN.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.create("graft-explain", logLevel = "ERROR")
     val all = SparkEntry.queries.keys.toSeq.sorted
     val sb = new StringBuilder
     sb.append("# Physical plans (all registry queries)\n\n")

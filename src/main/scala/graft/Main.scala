@@ -1,9 +1,8 @@
 package graft
 
-import graft.classify.{KeywordClassifier, TextClassifier}
+import graft.classify.TextClassifier
 import graft.sinks.ParquetKVSink
 import graft.streaming.StreamingPipeline
-import org.apache.spark.sql.SparkSession
 
 /** CLI entry point — the reference's application surface
   * (`/root/reference/src/main/scala/TwitchStream/TwitchStream.scala:3-37`:
@@ -24,28 +23,21 @@ object Main {
     val outDir = if (args.length > 5) args(5) else "/tmp/graft-tables"
     val ckptDir = if (args.length > 6) args(6) else "/tmp/graft-checkpoints"
 
-    val spark = SparkSession.builder()
-      .appName(s"graft-$channel")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .getOrCreate()
-
-    val lines = spark.readStream
-      .format("twitch-irc")
-      .option("channel", channel)
-      .option("nick", nick)
-      .option("pass", pass)
-      .load()
-
+    val spark = GraftSession.create(s"graft-$channel")
     val cfg = StreamingPipeline.Config(
       channel = channel.stripPrefix("#"),
       language = language,
       batchInterval = s"$batchSeconds seconds")
-    val (wc, cc) = StreamingPipeline.start(
+    val lines = StreamingPipeline.readTwitchIrc(spark, cfg, nick = nick, pass = pass)
+    StreamingPipeline.start(
       lines, cfg, TextClassifier.default, new ParquetKVSink(outDir), ckptDir)
 
-    wc.awaitTermination()
-    cc.awaitTermination()
+    // either query ending ends the run (awaiting one query alone would
+    // leave a failed sibling unnoticed); the survivor is stopped with it
+    try spark.streams.awaitAnyTermination()
+    finally {
+      spark.streams.active.foreach(_.stop())
+      spark.stop()
+    }
   }
 }

@@ -1506,7 +1506,7 @@ object SparkEntry {
     * lookup, [[graft.operators.Skew.hotColdLeftJoin]]). Results are
     * row-identical to q101 BY CONSTRUCTION, so the oracle is q101's
     * verbatim — this entry oracle-checks the split arithmetic
-    * end-to-end at gate scale (LmSkewBench covers the plan/skew side).
+    * end-to-end at gate scale (BASELINE.md round 15 covers the plan/skew side).
     */
   private def q118_perplexity_hardened(s: SparkSession, dir: String): DataFrame =
     NgramLm.perplexity(Tables.documents(s, dir), "doc_id", "text", hotKeys = 32)
@@ -1516,8 +1516,8 @@ object SparkEntry {
     * instead of being handed a K. The fixture vocabulary is
     * near-uniform (auto would resolve 0 and this entry would not
     * exercise the split), so the corpus is first Zipf-collapsed the
-    * way `tools/LmSkewBench` derives its stress corpus: every token
-    * whose md5-60 is even folds onto the literal `zipfhot` (≈ half the
+    * way the round-15 skew measurement (BASELINE.md) derived its
+    * stress corpus: every token whose md5-60 is even folds onto the literal `zipfhot` (≈ half the
     * token mass on one unigram — a harsher head than natural text).
     * Auto then ENABLES the hot/cold split at gate scale
     * (plan-audited), and the oracle is the SAME perplexity SQL over
@@ -2702,7 +2702,7 @@ object SparkEntry {
     * cosine INSIDE the plan (the candidate TakeOrdered carries the
     * vector column, bounded by `rerank` — no join, no second corpus
     * pass, zero exchanges). The deep candidate cut is what makes BQ
-    * usable at its recall (BASELINE round-19 BqProbe table: Hamming@20
+    * usable at its recall (BASELINE.md round-19 BQ recall table: Hamming@20
     * alone recalls 6-7/20 of the exact top-20 on the fixture's 16-dim
     * vectors, Hamming@200 + exact re-rank recovers 18+; recall grows
     * with dimension). Both cuts are total orders (ham/cos with vec_id
@@ -2731,8 +2731,8 @@ object SparkEntry {
     * ±1 hyperplanes (`srp_expand`, md5-seeded — the q56 plane
     * convention, portable to DuckDB) and runs the candidate tier on
     * 256 angle-preserving sign bits, re-ranking the bounded survivors
-    * by exact cosine on the ORIGINAL floats. Honest numbers (BqProbe
-    * round-20 ledger): at equal depths the expanded tier dominates raw
+    * by exact cosine on the ORIGINAL floats. Honest numbers (BASELINE.md
+    * round-20 BQ ledger): at equal depths the expanded tier dominates raw
     * signs (top-20 recall 9.8/15.0/18.2 at @20/@50/@100 vs
     * 7.4/11.4/15.6), but full exact-top-10 coverage on this fixture
     * still needs ~240-deep cuts under EITHER sketch — so the cut stays
@@ -2924,9 +2924,9 @@ object SparkEntry {
     // per-stage survivor totals ride along as ONE one-row broadcast
     // frame (r22, guide §2.6/§1.2): the r21 form chained four separate
     // broadcast(df.agg(count)) builds, each a sequential driver-blocking
-    // broadcast-build job over its stage's full lineage — QProfile
-    // measured the q169/q174 pair as pure job-count overhead (33 jobs of
-    // 40-180 ms, stage work << wall). One union of literal-tagged rows
+    // broadcast-build job over its stage's full lineage — a stage
+    // profile (OPTIMIZATION_r22.md) measured the q169/q174 pair as pure
+    // job-count overhead (33 jobs of 40-180 ms, stage work << wall). One union of literal-tagged rows
     // into one conditional aggregate computes all four counts in ONE
     // broadcast build whose independent branches the scheduler runs
     // concurrently. Counts (and output columns/types) are identical:
@@ -2956,7 +2956,7 @@ object SparkEntry {
   /** SIX-stage front door (round 20): [[q169_front_door]] with the
     * round's rung-13 enforcement INSIDE the composed oracle —
     * blocklist → domain quota → TEMPLATE-FAMILY CAP → boilerplate →
-    * C4 → gate, the `UnifiedIngestBench` streaming order replayed as
+    * C4 → gate, the unified-ingest streaming order (BASELINE.md) replayed as
     * one batch query. Each doc carries both fixtures: the q147 URL
     * (domain stages) and a q168-style layout wrap of its text (three
     * big `% 3` families + the `% 7` aside sub-families — the admitted
@@ -3234,9 +3234,10 @@ object SparkEntry {
     val emb = Tables.embeddings(s, dir)
     // r22 (guide §1.2): the query table feeds THREE sequential broadcast
     // builds (bm25Join's qt and qv, the rerank's qv) — un-materialized,
-    // each build re-ran the docs scan + embeddings join (QProfile: three
-    // 100-250 ms single-task build stages). The table is |corpus|/97
-    // rows by construction — checkpoint it once.
+    // each build re-ran the docs scan + embeddings join (stage profile,
+    // OPTIMIZATION_r22.md #6: three 100-250 ms single-task build
+    // stages). The table is |corpus|/97 rows by construction —
+    // checkpoint it once.
     val queries = docs
       .filter(col("doc_id") % 97 === 0)
       .select(
@@ -3794,7 +3795,7 @@ object SparkEntry {
     * q22 query scans ONLY the code table via the asymmetric-distance
     * LUT, and the check counts how many of the exact inner-product
     * top-20 the PQ top-100 candidate set recovers (the scan→re-rank
-    * recipe). Measured 20/20 at sf0.01 AND sf0.1 (`tools/PqProbe`);
+    * recipe). Measured 20/20 at sf0.01 AND sf0.1;
     * the oracle pins ≥16 plus the true compression ratio.
     */
   private def q79_pq_ann(s: SparkSession, dir: String): DataFrame = {
@@ -3832,8 +3833,8 @@ object SparkEntry {
     * the codebooks are SQL-expressible (q41 pattern), so the oracle
     * pins the deterministic recall of the exact cosine top-20 within
     * the composed top-20 — measured 10/20 at sf0.01 and 12/20 at sf0.1
-    * (`tools/IvfPqProbe`; the fixture embeddings are near-isotropic, so
-    * IVF recall tracks the probed fraction — 4/16 cells — rather than
+    * (BASELINE.md round-10 IVF-PQ recall; the fixture embeddings are
+    * near-isotropic, so IVF recall tracks the probed fraction — 4/16 cells — rather than
     * cluster structure; spherical routing measured identical) — plus
     * the structural constants.
     */
@@ -3902,7 +3903,7 @@ object SparkEntry {
     * nProbe = nLists twin — which probes every cell and therefore IS
     * the exact answer, trained once and shared — at least 0.6
     * (measured 0.823 at sf0.01 / 0.840 at sf0.1, min per-query 5/10,
-    * `tools/KnnJoinProbe`: probing 8/16 cells beats the naive 0.5
+    * BASELINE.md kNN-join recall sweep: probing 8/16 cells beats the naive 0.5
     * fraction because a query's own cell is always probed first).
     */
   private def q85_knn_join(s: SparkSession, dir: String): DataFrame = {
@@ -5458,7 +5459,7 @@ object SparkEntry {
       // IVF routing + PQ codebooks aren't SQL-expressible (q41/q79
       // pattern); the compression ratio is cross-checked against the
       // table's true vector width, the recall bound against the
-      // measured deterministic hits (tools/IvfPqProbe: 10/20 sf0.01,
+      // measured deterministic hits (BASELINE.md round 10: 10/20 sf0.01,
       // 12/20 sf0.1)
       """SELECT CAST(20 AS BIGINT) AS k_exact,
                 CAST(16 AS BIGINT) AS n_lists,

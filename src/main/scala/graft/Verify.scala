@@ -1,29 +1,18 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      // production wiring (round 18): the correctness gate runs with the
-      // deployment guards registered, like a real session
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // dev-only strict mode: a whole-stage-codegen compile failure
-      // aborts instead of silently running interpreted (catches e.g.
-      // generated static calls that don't resolve)
-      .config("spark.sql.codegen.fallback",
-        (!sys.env.contains("SPARK_GRAFT_STRICT_CODEGEN")).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // dev-only strict mode: a whole-stage-codegen compile failure
+    // aborts instead of silently running interpreted (catches e.g.
+    // generated static calls that don't resolve)
+    val strict =
+      if (sys.env.contains("SPARK_GRAFT_STRICT_CODEGEN"))
+        Map("spark.sql.codegen.fallback" -> "false")
+      else Map.empty[String, String]
+    val spark = GraftSession.create("graft-verify", extra = strict)
     new java.io.File(outDir).mkdirs()
     // dev-only subset filter (comma-separated name prefixes); driver
     // always runs the full registry
@@ -38,11 +27,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // per-query cache hygiene (see graft.Bench): operators persist
-      // multi-consumer intermediates; drop them between queries —
-      // both CacheManager entries and raw RDD persists (r22)
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      GraftSession.releaseCaches(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

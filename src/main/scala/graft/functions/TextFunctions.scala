@@ -148,12 +148,6 @@ object TextFunctions {
   def seededHash60(seed: Long, key: Column): Column =
     seededHash60(seed.toString, key)
 
-  /** Fast 64-bit fingerprint for engine-internal use (xxhash64 is
-    * codegen'd and ~10× md5; not oracle-portable).
-    */
-  def fastFingerprint(text: Column): Column =
-    xxhash64(concat_ws(" ", tokens(text)))
-
   // --- shingling / MinHash / SimHash ----------------------------------------
 
   /** Word n-gram shingles: `["a","b","c","d"]`, n=3 →
@@ -278,14 +272,6 @@ object TextFunctions {
       i += 1
     }
     m
-  }
-
-  /** `text → shingle strings` as one tight loop (for inverted-index
-    * explode paths).
-    */
-  def shinglesUdf(n: Int): Column => Column = {
-    val f = udf((text: String) => shinglesLocal(tokensLocal(text), n))
-    c => f(c)
   }
 
   /** `text → base shingle hashes mod p` as one tight loop (for MinHash
@@ -446,18 +432,6 @@ object TextFunctions {
     */
   def minHashSignature(shingleCol: Column, k: Int): Column =
     minHashFromHashes(shingleHashes(shingleCol), k)
-
-  /** LSH band keys from a MinHash signature: `bands` bands of
-    * `rows = k/bands` signature values, each band hashed to one key.
-    * Docs sharing any band key are candidate near-duplicates.
-    */
-  def minHashBands(signature: Column, bands: Int, rows: Int): Column =
-    transform(
-      sequence(lit(0), lit(bands - 1)),
-      b =>
-        struct(
-          b.alias("band"),
-          md5(concat_ws("_", slice(signature, b * rows + 1, lit(rows)))).alias("key")))
 
   /** 60-bit SimHash over the token multiset, computed per-row with a
     * 60-wide counter array folded by `aggregate`/`zip_with` — no shuffle,

@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType}
   * The BQ tier's geometry fix: coordinate-sign quantization
   * ([[BinaryQuantExprs]]) keys on whatever basis the embedding
   * happened to ship in, and at low dimension its Hamming ranking is
-  * noise- and tie-dominated (BASELINE BqProbe tables); projecting to
+  * noise- and tie-dominated (BASELINE.md round-19 BQ recall tables); projecting to
   * `outDim` dense ±1 hyperplane sums first yields `outDim`
   * angle-preserving sign bits — BQ recall then tracks the projection
   * dimension, not the storage dimension. Chain:

@@ -155,7 +155,7 @@ object Dedup {
     * scan-side shingle hashing (the dominant cost for real KB-size
     * documents) runs once PER POSITION. `localCheckpoint` measured ~20%
     * faster than `persist` here (no InMemoryRelation/AQE re-analysis,
-    * see T19); blocks are freed by the ContextCleaner once the returned
+    * BASELINE.md round 5); blocks are freed by the ContextCleaner once the returned
     * plan is unreferenced.
     */
   // r22 MEASURED REJECTION (guide §1.1 — keep the empirical loop

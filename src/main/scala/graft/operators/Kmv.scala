@@ -32,18 +32,6 @@ import org.apache.spark.sql.functions._
   */
 object Kmv {
 
-  /** Per-group sketch table: `(group, kmv)` with `kmv` the sorted ≤ k
-    * smallest distinct md5-60 hashes of `itemCol` (pre-hashed by this
-    * method; null items ignored).
-    */
-  def sketchTable(items: DataFrame, groupCol: String, itemCol: String, k: Int): DataFrame =
-    items
-      .select(col(groupCol).alias("grp"),
-        TextFunctions.md5Hash60(col(itemCol).cast("string")).alias("h"))
-      .na.drop(Seq("h"))
-      .groupBy("grp")
-      .agg(KmvSketchAgg.kmvSketch(col("h"), k).alias("kmv"))
-
   /** The KMV estimator as a projection over the sketch array: fewer
     * than k minima ⇒ the sketch is the distinct set (exact count);
     * otherwise `(k−1) · 2^60 / h_(k)` rounded to a long. Every operand

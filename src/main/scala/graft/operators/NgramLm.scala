@@ -130,7 +130,7 @@ object NgramLm {
     *     the number of distinct bigrams TOUCHING a head token (one
     *     count over `bi`), clamped to [`floorK`, `capK`]: the bigram
     *     hot set must cover the head's successor/predecessor fan —
-    *     the LmSkewBench lesson that the head count alone (K = 1
+    *     the round-15 skew lesson (BASELINE.md) that the head count alone (K = 1
     *     there) leaves the (head, x) probe rows in the cold shuffle.
     *
     * Deterministic for a given LM (no sampling), so replay-stable in

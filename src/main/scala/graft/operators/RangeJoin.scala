@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * equi key, an equi-join whose inequality RESIDUAL examines every
   * key's points × intervals: Σ_k p_k·i_k pairs, quadratic in per-key
   * density. At sparse keys that residual is competitive (measured:
-  * 0.8× on the sf0.1 event log, `tools/RangeJoinAB`); as keys densify
+  * 0.8× on the sf0.1 event log, BASELINE.md round 16); as keys densify
   * — longer retention, more traffic per entity, coarser keys — it
   * diverges quadratically while the bucketed form stays linear
   * (14× faster at 10× volume with 10 keys; see BASELINE.md). With no

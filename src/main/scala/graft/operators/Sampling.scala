@@ -24,10 +24,6 @@ object Sampling {
   def hashBucket(key: Column, denom: Int): Column =
     TextFunctions.md5Hash60(key.cast("string")) % denom
 
-  /** Uniform sample: keep rows with `hashBucket < permille`. */
-  def uniformSample(df: DataFrame, keyCol: String, permille: Int): DataFrame =
-    df.filter(hashBucket(col(keyCol), 1000) < permille)
-
   /** Stratified sample with a per-stratum keep-rate (in ‰). Strata
     * missing from `ratesPermille` keep `defaultPermille`. One scan, no
     * shuffle: the rate map compiles to a literal CASE chain.

@@ -223,7 +223,7 @@ object Similarity {
   /** [[bqTopK]] with the candidate tier in SRP-EXPANDED sign space
     * (round 20): coordinate-sign BQ keys on whatever basis the
     * embedding shipped in — at low storage dimension its Hamming
-    * ranking is noise-dominated (BASELINE BqProbe tables). Here each
+    * ranking is noise-dominated (BASELINE.md round-19 BQ recall tables). Here each
     * vector first projects through `outDim` deterministic ±1
     * hyperplanes ([[graft.functions.expressions.SrpExpandExpr]], one
     * fused codegen pass, no md5 on the row path), so the candidate
@@ -632,8 +632,8 @@ object Similarity {
     * quantizer CO-LOCATES are compared. Near-identical vectors (the
     * high-threshold regime this targets) virtually always share a
     * cell; semantically distant pairs straddle cells — measured ≈ 0.36
-    * pair recall at threshold 0.4 on the fixtures
-    * (`tools/SemProbe`). For distant-pair completeness use
+    * pair recall at threshold 0.4 on the fixtures (the near-uniform
+    * fixture regime, BASELINE.md round 14). For distant-pair completeness use
     * [[srpNearDup]] (recall tunable via bands) or the exact tier.
     *
     * Determinism: seeded sample-trained centroids (see
@@ -1155,8 +1155,8 @@ object Similarity {
     * band is ~`2^r · (n/2^r)²/2 = n²/2^(r+1)`, so a FIXED `rowsPerBand`
     * is quadratic in corpus size — the bits must grow with `log2(n)` to
     * hold bucket population (and thus per-bucket pair work) constant.
-    * Measured (tools/ScaleBench): at 10× corpus with r=3 the sketch
-    * stage went superlinear (exponent 1.11) purely from candidate
+    * Measured (BASELINE.md round-6 scaling exponents): at 10× corpus
+    * with r=3 the sketch stage went superlinear (exponent 1.11) purely from candidate
     * fan-out; auto-sized bits restore ~linear scaling. Raising r lowers
     * per-band recall (p^r), so pair it with more bands when recall
     * matters: recall = 1-(1-p^r)^b.
@@ -1185,7 +1185,7 @@ object Similarity {
   /** `nBands = 0` / `rowsPerBand = 0` (the DEFAULTS) auto-size from the
     * corpus: `rowsPerBand = autoRowsPerBand(emb.count())` holds bucket
     * population — and therefore candidate volume — LINEAR in corpus size
-    * (a fixed bit count is `n²/2^(r+1)`, quadratic; ScaleBench measured
+    * (a fixed bit count is `n²/2^(r+1)`, quadratic; BASELINE.md round 6 measured
     * exponent 1.11 at 10× for fixed r=3 vs 0.24 auto-sized), and
     * `nBands = bandsForRecall(threshold, r)` then holds boundary recall
     * at 0.9 per `1-(1-p^r)^b`. The band count is capped at `maxBands`

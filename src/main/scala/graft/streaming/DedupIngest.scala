@@ -731,7 +731,6 @@ object DedupIngest {
       annNLists: Int = 16,
       annM: Int = 16,
       annCodes: Int = 64,
-      tierTimer: (String, Double) => Unit = (_, _) => (),
       deconBench: Option[DataFrame] = None,
       deconThreshold: Double = 0.95,
       deconNProbe: Int = 4,
@@ -742,14 +741,6 @@ object DedupIngest {
     val spark = batch.sparkSession
     if (batch.head(1).isEmpty || alreadyApplied(spark, sink, table, batchId)) return
     Dedup.requireNumericId(batch, idCol, "applyUnifiedBatch")
-    // timing hook for UnifiedIngestBench: wall seconds per tier (the
-    // eager localCheckpoints make tier boundaries real barriers)
-    def timed[T](tier: String)(body: => T): T = {
-      val t0 = System.nanoTime()
-      val r = body
-      tierTimer(tier, (System.nanoTime() - t0) / 1e9)
-      r
-    }
     val docs = batch.select(
       col(idCol).cast("long").alias("id"),
       col(textCol).cast("string").alias("text"),
@@ -772,7 +763,7 @@ object DedupIngest {
     // re-admits that row on replay; tier 2 then drops it as an exact
     // text match of the already-kept corpus doc, so no duplicate can
     // reach the sem/ANN tiers.)
-    val exactKept = timed("exact") {
+    val exactKept = {
       val exactState = sink.read(spark, s"${table}__exact", exactStateSchema)
       // NULL-SAFE fingerprint joins throughout (mergeExactState's <=>
       // contract): a null-text doc's null fingerprint is ONE dedup
@@ -826,17 +817,16 @@ object DedupIngest {
     // replay-stable, no state of its own. Unscorable (<2-token) docs
     // pass through — compose a length predicate upstream to kill them.
     val qualityKept = lmPath match {
-      case Some(p) => timed("quality") {
+      case Some(p) =>
         val lm = graft.operators.NgramLm.loadLm(spark, p)
         graft.operators.NgramLm
           .keepByQuality(exactKept, "id", "text", lm, qualityCutoff)
           .localCheckpoint(true)
-      }
       case None => exactKept
     }
 
     // ---- tier 2: near-dup over exact survivors (persisted band index)
-    val nearKept = timed("near") {
+    val nearKept = {
       val (nearCorpus, nearBands, nearSets) = (
         sink.read(spark, s"${table}__near", nearDupStateSchema),
         sink.read(spark, s"${table}__near__bands", nearDupBandStateSchema),
@@ -869,7 +859,7 @@ object DedupIngest {
       // benchmark is a fixed broadcast, so the decision is a pure
       // function of (batch, benchmark, model): replay-stable, no state.
       val semIn = deconBench match {
-        case Some(bench) => timed("decon") {
+        case Some(bench) =>
           // positional (id, vec) contract on the benchmark frame —
           // semanticMatches reads both sides through one column-name pair
           val benchNorm = bench.select(
@@ -879,14 +869,13 @@ object DedupIngest {
             deconThreshold, math.min(deconNProbe, centroids.length))
             .select(col("doc_id").alias("id")).distinct()
           nearKept.join(flagged, Seq("id"), "left_anti").localCheckpoint(true)
-        }
         case None => nearKept
       }
 
       // an all-contaminated batch leaves nothing for the sem/ANN tiers
       // (same skip as an all-dup batch)
       if (semIn.head(1).nonEmpty) {
-      val finalKept = timed("sem") {
+      val finalKept = {
         val semState = sink.read(spark, s"${table}__sem", semanticStateSchema)
         val (semKeptIds, newSemState) = mergeSemanticStateFrozenWithKept(
           semState, semIn, "id", "vec", centroids, semThreshold)
@@ -905,24 +894,22 @@ object DedupIngest {
       // non-local path (HDFS/S3) and would silently rebuild the model
       // each batch.
       annIndexPath.foreach { path =>
-        timed("ann") {
-          val vecs = finalKept.select("id", "vec").filter(col("vec").isNotNull)
-          if (vecs.head(1).nonEmpty) {
-            val modelPath = new org.apache.hadoop.fs.Path(
-              s"$path/${Similarity.ivfPqModelDirName}")
-            val fs = modelPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            // heal a crashed compaction swap BEFORE the bootstrap
-            // probe: a stranded root would read as "no model", retrain,
-            // and orphan the whole pre-compaction index
-            graft.operators.ArtifactSwap.recover(
-              fs, new org.apache.hadoop.fs.Path(path), "startUnified(ann)",
-              sweep = true)
-            if (!fs.exists(modelPath))
-              Similarity.buildIvfPqModelOnly(
-                vecs, "id", "vec", path,
-                nLists = annNLists, m = annM, nCodes = annCodes, trainSample = trainSample)
-            Similarity.appendToIvfPqIndex(vecs, "id", "vec", path, batchId)
-          }
+        val vecs = finalKept.select("id", "vec").filter(col("vec").isNotNull)
+        if (vecs.head(1).nonEmpty) {
+          val modelPath = new org.apache.hadoop.fs.Path(
+            s"$path/${Similarity.ivfPqModelDirName}")
+          val fs = modelPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          // heal a crashed compaction swap BEFORE the bootstrap
+          // probe: a stranded root would read as "no model", retrain,
+          // and orphan the whole pre-compaction index
+          graft.operators.ArtifactSwap.recover(
+            fs, new org.apache.hadoop.fs.Path(path), "startUnified(ann)",
+            sweep = true)
+          if (!fs.exists(modelPath))
+            Similarity.buildIvfPqModelOnly(
+              vecs, "id", "vec", path,
+              nLists = annNLists, m = annM, nCodes = annCodes, trainSample = trainSample)
+          Similarity.appendToIvfPqIndex(vecs, "id", "vec", path, batchId)
         }
       }
 
@@ -935,11 +922,9 @@ object DedupIngest {
       // surrounding tiers' because finalKept recomputes identically on
       // a crash replay (the tier-1 replay-stable keep rule).
       searchIndexPath.foreach { path =>
-        timed("search") {
-          SearchIndex.applyBatch(
-            finalKept.select(col("id"), col("text")), batchId,
-            "id", "text", path, sink, s"${table}__srch", searchBuckets)
-        }
+        SearchIndex.applyBatch(
+          finalKept.select(col("id"), col("text")), batchId,
+          "id", "text", path, sink, s"${table}__srch", searchBuckets)
       }
       }
     }
@@ -981,7 +966,6 @@ object DedupIngest {
       annNLists: Int = 16,
       annM: Int = 16,
       annCodes: Int = 64,
-      tierTimer: (String, Double) => Unit = (_, _) => (),
       deconBench: Option[DataFrame] = None,
       deconThreshold: Double = 0.95,
       deconNProbe: Int = 4,
@@ -999,7 +983,7 @@ object DedupIngest {
         applyUnifiedBatch(
           batch, batchId, idCol, textCol, vecCol, sink, table, annIndexPath,
           n, k, bands, textThreshold, semThreshold, nLists, trainSample,
-          annNLists, annM, annCodes, tierTimer, deconBench, deconThreshold, deconNProbe,
+          annNLists, annM, annCodes, deconBench, deconThreshold, deconNProbe,
           lmPath, qualityCutoff, searchIndexPath, searchBuckets)
         // maintenance hooks AFTER the ack, on the trigger's own thread
         // — the only safe place to compact a live stream's artifacts

@@ -72,8 +72,9 @@ object StreamQuota {
 
   /** [[admit]] carrying the document payload through — the form that
     * CHAINS in front of a gate + ingest composition (quota first, so
-    * every downstream stage sees the quota'd stream, the PipelineBench
-    * front-door order). The per-trigger exchange routes the trigger's
+    * every downstream stage sees the quota'd stream, the batch
+    * pipeline's front-door order, BASELINE.md round 17). The
+    * per-trigger exchange routes the trigger's
     * `(group, id, text, embedding)` rows onto group keys — bounded by
     * the trigger by contract (the [[StreamPack]] materialize-then-sort
     * trade); dropped rows never reach the gate, the dedup state, or

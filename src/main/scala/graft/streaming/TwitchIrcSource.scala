@@ -27,13 +27,15 @@ import scala.collection.mutable.ArrayBuffer
   * Offsets count lines received; data is buffered on the driver between
   * offsets (the same architecture as Spark's built-in socket source).
   * The live protocol is at-most-once across restarts — the reference's
-  * receiver has the same contract (SURVEY.md §7.4).
+  * receiver has the same contract (SURVEY.md §7.4): lines sent while no
+  * query is connected are lost, and a restarted session numbers its
+  * lines on from the checkpoint's committed offset.
   *
   * Usage:
   * {{{
   *   spark.readStream.format("twitch-irc")
   *     .option("host", "irc.chat.twitch.tv").option("port", "6667")
-  *     .option("channel", "#somechannel")
+  *     .option("channel", "#somechannel")   // the leading '#' is optional
   *     .option("nick", "mynick").option("pass", "oauth:…")
   *     .load()   // schema: value STRING, event_ts TIMESTAMP
   * }}}
@@ -78,7 +80,9 @@ final class TwitchIrcTable(options: CaseInsensitiveStringMap) extends Table with
     }
 }
 
-/** Offset = total lines received since this stream started. */
+/** Offset = lines received, counted on from the checkpoint's committed
+  * offset when the query restarts (numbering starts at 0 otherwise).
+  */
 final case class LineOffset(n: Long) extends Offset {
   override def json(): String = n.toString
 }
@@ -120,6 +124,8 @@ final class TwitchIrcMicroBatchStream(
   // (line, receipt micros); index i holds line number baseOffset + i
   private val buffer = ArrayBuffer.empty[(String, Long)]
   private var baseOffset = 0L
+  // set by the first start offset Spark hands in (see rebaseOnce)
+  private var started = false
   private var client: IrcLineClient = _
   @volatile private var closed = false
 
@@ -240,6 +246,22 @@ final class TwitchIrcMicroBatchStream(
     }
   }
 
+  /** A session numbers its lines from 0, but a query restarted from a
+    * checkpoint resumes at the committed offset N: lines 0..N-1 of the new
+    * session would be withheld until the count passed N, and then lost.
+    * So the first start offset Spark hands in — the committed one on a
+    * restart, 0 on a fresh query — becomes this session's base, and the
+    * lines buffered so far are numbered on from it. Only that first one:
+    * later start offsets run ahead of `commit`, which Spark calls for the
+    * previous batch after it asks for the next one.
+    */
+  private def rebaseOnce(start: Offset): Unit = {
+    if (!started) {
+      started = true
+      baseOffset = start.asInstanceOf[LineOffset].n
+    }
+  }
+
   override def initialOffset(): Offset = LineOffset(0L)
   override def deserializeOffset(json: String): Offset = LineOffset(json.toLong)
 
@@ -261,6 +283,7 @@ final class TwitchIrcMicroBatchStream(
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     ensureConnected()
     synchronized {
+      rebaseOnce(start)
       refillFromSpill()
       val available = baseOffset + buffer.size
       limit match {
@@ -274,6 +297,9 @@ final class TwitchIrcMicroBatchStream(
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
     synchronized {
+      // a restart can re-run the batch its checkpoint logged but never
+      // committed before asking for a new offset
+      rebaseOnce(start)
       val s = start.asInstanceOf[LineOffset].n
       val e = end.asInstanceOf[LineOffset].n
       val rows = buffer.slice((s - baseOffset).toInt, (e - baseOffset).toInt).toArray
@@ -311,7 +337,8 @@ final class TwitchIrcMicroBatchStream(
 final case class IrcLinesPartition(rows: Array[(String, Long)]) extends InputPartition
 
 /** Blocking-reader IRC client on a daemon thread. Auth handshake (PASS →
-  * NICK → JOIN, `IRCBot.scala:23-35`), PONG keepalive (`IRCBot.scala:47-50`),
+  * NICK → JOIN `#channel`, with or without the `#` in `channel`,
+  * `IRCBot.scala:23-35`), PONG keepalive (`IRCBot.scala:47-50`),
   * auth-phase retry on socket errors (`IRCBot.scala:37-39`).
   */
 final class IrcLineClient(
@@ -337,7 +364,7 @@ final class IrcLineClient(
           new InputStreamReader(s.getInputStream, StandardCharsets.UTF_8))
         if (pass.nonEmpty) out.println(s"PASS $pass")
         out.println(s"NICK $nick")
-        out.println(s"JOIN $channel")
+        out.println(s"JOIN #${channel.stripPrefix("#")}")
         var line = in.readLine()
         while (line != null && !closed) {
           if (line.startsWith("PING")) out.println(line.replaceFirst("PING", "PONG"))

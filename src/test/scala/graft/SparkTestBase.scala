@@ -29,22 +29,10 @@ trait SparkTestBase extends AnyFunSuite {
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      // production wiring (round 18): every spec runs with the guard
-      // rules registered — 500+ specs double as a no-misfire sweep for
-      // the deployment guards (warn mode unless a test opts into fail)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  // every spec runs with the production settings, guard rules included
+  // (500+ specs double as a no-misfire sweep for the deployment guards,
+  // warn mode unless a test opts into fail), pinned at 4 cores whatever
+  // SPARK_GRAFT_CPUS says
+  lazy val session: SparkSession =
+    GraftSession.create("graft-tests", cores = 4, logLevel = "ERROR")
 }

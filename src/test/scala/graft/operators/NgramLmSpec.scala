@@ -144,8 +144,8 @@ class NgramLmSpec extends SparkTestBase {
 
   test("autoHotKeys: fan-covering K on a Zipf head, 0 on near-uniform, 0 on empty") {
     // ~50%-mass head: auto must enable AND cover the head's bigram fan
-    // (the LmSkewBench lesson — K must reach the floor of 64, not the
-    // head count of 1)
+    // (the round-15 hot-gram skew lesson, BASELINE.md — K must reach
+    // the floor of 64, not the head count of 1)
     val rnd = new scala.util.Random(7)
     val vocabWords = (0 until 20).map(i => s"w$i")
     def zipfText(): String =

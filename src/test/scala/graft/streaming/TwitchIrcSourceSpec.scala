@@ -1,13 +1,15 @@
 package graft.streaming
 
 import graft.SparkTestBase
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.Trigger
 
 import java.io.{BufferedReader, InputStreamReader, PrintWriter}
 import java.net.ServerSocket
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
-import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import scala.jdk.CollectionConverters._
 import scala.collection.mutable.ArrayBuffer
 
 /** Fault-injecting fake IRC server (SURVEY.md §5.5): asserts the
@@ -273,6 +275,99 @@ class TwitchIrcSourceSpec extends SparkTestBase {
     } finally {
       client.close()
       server.close()
+    }
+  }
+
+  test("JOIN names the channel with a '#' whether or not the option has one") {
+    val server = new ServerSocket(0)
+    val handshake = new ConcurrentLinkedQueue[String]()
+    val joined = new CountDownLatch(1)
+    val serverThread = new Thread(() => {
+      val s = server.accept()
+      val in = new BufferedReader(new InputStreamReader(s.getInputStream, StandardCharsets.UTF_8))
+      (1 to 3).foreach(_ => handshake.add(in.readLine()))
+      joined.countDown()
+      Thread.sleep(30000)
+    })
+    serverThread.setDaemon(true)
+    serverThread.start()
+
+    // StreamingPipeline.readTwitchIrc passes Config.channel, '#' stripped
+    val stream = new TwitchIrcMicroBatchStream(
+      "127.0.0.1", server.getLocalPort, "chan", "nick", "oauth:x")
+    try {
+      stream.latestOffset() // connects
+      assert(joined.await(10, TimeUnit.SECONDS), "handshake never completed")
+      assert(handshake.asScala.toList == List("PASS oauth:x", "NICK nick", "JOIN #chan"))
+    } finally {
+      stream.stop()
+      server.close()
+    }
+  }
+
+  test("restart from a checkpoint: lines sent after the restart reach the sink") {
+    val server = new ServerSocket(0)
+    val open = ArrayBuffer.empty[java.net.Socket] // held open until the test ends
+    val serverThread = new Thread(() => {
+      var n = 0
+      while (!server.isClosed) {
+        try {
+          val s = server.accept()
+          open += s
+          n += 1
+          val in = new BufferedReader(new InputStreamReader(s.getInputStream, StandardCharsets.UTF_8))
+          val out = new PrintWriter(s.getOutputStream, true)
+          in.readLine(); in.readLine(); in.readLine() // PASS/NICK/JOIN
+          // first session: 5 lines; restarted session: 3 new ones
+          if (n == 1) (1 to 5).foreach(i => out.println(s":u!u@h PRIVMSG #c :before $i"))
+          else (1 to 3).foreach(i => out.println(s":u!u@h PRIVMSG #c :after $i"))
+        } catch { case _: Exception => () }
+      }
+    })
+    serverThread.setDaemon(true)
+    serverThread.start()
+
+    val ckpt = Files.createTempDirectory("graft-irc-restart").toString
+    val got = new ConcurrentLinkedQueue[String]()
+    def start() = spark.readStream
+      .format("twitch-irc")
+      .option("host", "127.0.0.1")
+      .option("port", server.getLocalPort.toString)
+      .option("channel", "#c")
+      .option("nick", "nick")
+      .option("pass", "oauth:x")
+      .load()
+      .writeStream
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.ProcessingTime("100 milliseconds"))
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        batch.select("value").collect().foreach(r => got.add(r.getString(0)))
+      }
+      .start()
+    def waitFor(what: => String)(cond: => Boolean): Unit = {
+      val deadline = System.currentTimeMillis() + 30000
+      while (!cond && System.currentTimeMillis() < deadline) Thread.sleep(100)
+      assert(cond, what)
+    }
+    def count(prefix: String) = got.asScala.count(_.contains(s"PRIVMSG #c :$prefix"))
+
+    try {
+      val first = start()
+      try {
+        waitFor(s"first session delivered ${count("before")}/5 lines")(count("before") == 5)
+        // stop only once the batches are in the commit log (progress is
+        // reported after the commit), so the restart resumes at offset 5
+        waitFor("first session never committed its 5 lines")(
+          first.recentProgress.map(_.numInputRows).sum >= 5L)
+      } finally first.stop()
+
+      val second = start()
+      try waitFor(s"restarted session delivered ${count("after")}/3 new lines")(count("after") == 3)
+      finally second.stop()
+      assert(count("before") == 5, "lines of the first session were replayed")
+    } finally {
+      server.close()
+      open.foreach(_.close())
     }
   }
 }
