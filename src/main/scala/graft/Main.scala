@@ -7,8 +7,8 @@ import graft.streaming.StreamingPipeline
 /** CLI entry point — the reference's application surface
   * (`/root/reference/src/main/scala/TwitchStream/TwitchStream.scala:3-37`:
   * `channel batchSeconds language nick oauth`), wired to the Spark-native
-  * topology: `twitch-irc` DSv2 source → parse/clean → running-count
-  * aggregations → parquet KV snapshot tables. The `language` argument is
+  * topology: `twitch-irc` DSv2 source → parse/clean → one running-count
+  * query → parquet KV snapshot tables. The `language` argument is
   * honored (the reference accepted and ignored it — SURVEY.md §2.11.4).
   */
 object Main {
@@ -29,15 +29,10 @@ object Main {
       language = language,
       batchInterval = s"$batchSeconds seconds")
     val lines = StreamingPipeline.readTwitchIrc(spark, cfg, nick = nick, pass = pass)
-    StreamingPipeline.start(
+    val (query, _) = StreamingPipeline.start(
       lines, cfg, TextClassifier.default, new ParquetKVSink(outDir), ckptDir)
 
-    // either query ending ends the run (awaiting one query alone would
-    // leave a failed sibling unnoticed); the survivor is stopped with it
-    try spark.streams.awaitAnyTermination()
-    finally {
-      spark.streams.active.foreach(_.stop())
-      spark.stop()
-    }
+    try query.awaitTermination()
+    finally spark.stop()
   }
 }

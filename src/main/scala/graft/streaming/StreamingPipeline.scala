@@ -4,15 +4,16 @@ import graft.classify.TextClassifier
 import graft.model.IrcParser
 import graft.operators.WordCount
 import graft.sinks.KVTableSink
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** The reference's live topology (`/root/reference/src/main/scala/TwitchStream/SparkRunner.scala:51-165`)
   * re-expressed on Structured Streaming: one source of raw IRC lines →
-  * parse → tokenize/stop-words → two streaming aggregations (running
-  * word counts, running predicted-category counts) → per-batch snapshot
-  * sinks.
+  * parse → tokenize/stop-words and classify → one streaming aggregation
+  * keyed by (`kind`, `key`), holding the running word counts and the
+  * running predicted-category counts → per-batch snapshots of the two
+  * reference tables.
   *
   * Semantics parity (SURVEY.md §2.9):
   *  - running totals over ALL time, keys never expire (ST3) — Complete
@@ -23,6 +24,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    `foreachBatch` + `SaveMode.Overwrite` against a [[KVTableSink]];
   *  - micro-batch cadence via processing-time trigger (ST1);
   *  - checkpointing via `checkpointLocation` (ST7).
+  *
+  * One query means one source connection, and both tables count the same
+  * messages: each trigger reads one offset range and updates both.
   */
 object StreamingPipeline {
 
@@ -67,27 +71,35 @@ object StreamingPipeline {
   /** Raw `value` lines → parsed message frame (columnar, codegen). */
   def parse(lines: DataFrame): DataFrame = IrcParser.parse(lines)
 
-  /** Streaming running word counts (A3+A4): explode clean tokens, filter
-    * short words, unbounded `groupBy.count`. Catalyst plans partial +
-    * final hash aggregation into the state store — the map-side combine
-    * the reference hand-wrote with `reduceByKey` (`SparkRunner.scala:126`).
+  /** Word keys of a message (A3): clean tokens longer than `minWordLength`. */
+  private def wordKeys(text: Column, cfg: Config): Column =
+    filter(WordCount.cleanTokens(text, cfg.language), w => length(w) > cfg.minWordLength)
+
+  /** Category keys of a message: its predicted labels. With the default
+    * keyword classifier this is the native `keyword_classify` expression,
+    * so the plan is UDF-free; an RPC-backed classifier falls back to the
+    * scalar UDF.
+    */
+  private def categoryKeys(text: Column, clf: TextClassifier): Column =
+    TextClassifier.asColumn(clf)(text)
+
+  /** Streaming running word counts (A3+A4): explode the word keys,
+    * unbounded `groupBy.count`. Catalyst plans partial + final hash
+    * aggregation into the state store — the map-side combine the
+    * reference hand-wrote with `reduceByKey` (`SparkRunner.scala:126`).
     */
   def wordCounts(messages: DataFrame, cfg: Config): DataFrame =
     messages
-      .select(explode(WordCount.cleanTokens(col("text"), cfg.language)).alias("word"))
-      .filter(length(col("word")) > cfg.minWordLength)
+      .select(explode(wordKeys(col("text"), cfg)).alias("word"))
       .groupBy("word")
       .count()
 
-  /** Streaming running category counts: classify → explode labels →
-    * unbounded `groupBy.count` (`SparkRunner.scala:82-118`). With the
-    * default keyword classifier the classify step is the native
-    * `keyword_classify` expression, so the branch's plan is UDF-free;
-    * an RPC-backed classifier falls back to the scalar UDF.
+  /** Streaming running category counts: explode the category keys,
+    * unbounded `groupBy.count` (`SparkRunner.scala:82-118`).
     */
   def categoryCounts(messages: DataFrame, clf: TextClassifier): DataFrame =
     messages
-      .select(explode(TextClassifier.asColumn(clf)(col("text"))).alias("category"))
+      .select(explode(categoryKeys(col("text"), clf)).alias("category"))
       .groupBy("category")
       .count()
 
@@ -101,17 +113,30 @@ object StreamingPipeline {
       ttlSeconds: Int,
       checkpointDir: String,
       trigger: Trigger): StreamingQuery =
+    startComplete(aggregated, checkpointDir, trigger) { batch =>
+      sink.write(batch, table, SaveMode.Overwrite, ttlSeconds)
+    }
+
+  private def startComplete(aggregated: DataFrame, checkpointDir: String, trigger: Trigger)(
+      writeSnapshot: DataFrame => Unit): StreamingQuery =
     aggregated.writeStream
       .outputMode("complete")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink.write(batch, table, SaveMode.Overwrite, ttlSeconds)
-      }
+      .foreachBatch((batch: DataFrame, _: Long) => writeSnapshot(batch))
       .start()
 
-  /** Full topology: both branches from one line stream. Returns the two
-    * queries (wordcount, categoryCount).
+  /** Full topology: one complete-mode query over one scan of `lines`.
+    * Each message's word keys and category keys are tagged and exploded
+    * together as (`kind`, `key`) rows and counted by one
+    * `groupBy(kind, key).count()` state operator, checkpointed at
+    * `<checkpointRoot>/counts`. Each trigger persists the snapshot once
+    * and writes `${channel}_wordcount` (`word`, `count`) and
+    * `${channel}_categoryCount` (`category`, `count`) from it.
+    *
+    * Returns the one query twice, as (wordcount, categoryCount), so
+    * callers written against the two-query topology keep working:
+    * stopping or awaiting either stops or awaits both tables.
     */
   def start(
       lines: DataFrame,
@@ -119,14 +144,31 @@ object StreamingPipeline {
       clf: TextClassifier,
       sink: KVTableSink,
       checkpointRoot: String): (StreamingQuery, StreamingQuery) = {
-    val messages = parse(lines)
-    val trigger = Trigger.ProcessingTime(cfg.batchInterval)
-    val wc = startSnapshotQuery(
-      wordCounts(messages, cfg), sink, s"${cfg.channel}_wordcount",
-      cfg.wordCountTtl, s"$checkpointRoot/wordcount", trigger)
-    val cc = startSnapshotQuery(
-      categoryCounts(messages, clf), sink, s"${cfg.channel}_categoryCount",
-      cfg.categoryCountTtl, s"$checkpointRoot/categoryCount", trigger)
-    (wc, cc)
+    def tagged(kind: String, keys: Column): Column =
+      transform(keys, k => struct(lit(kind).alias("kind"), k.alias("key")))
+    val text = col("text")
+    // null text yields null word keys and no category keys, so the null
+    // concat drops nothing either table would have counted
+    val counts = parse(lines)
+      .select(inline(concat(
+        tagged("word", wordKeys(text, cfg)), tagged("category", categoryKeys(text, clf)))))
+      .groupBy("kind", "key")
+      .count()
+    def table(batch: DataFrame, kind: String): DataFrame =
+      batch.where(col("kind") === kind).select(col("key").alias(kind), col("count"))
+
+    val query = startComplete(counts, s"$checkpointRoot/counts",
+      Trigger.ProcessingTime(cfg.batchInterval)) { batch =>
+      // both tables read the snapshot; without the persist the stateful
+      // plan would run once per table
+      batch.persist()
+      try {
+        sink.write(table(batch, "word"), s"${cfg.channel}_wordcount",
+          SaveMode.Overwrite, cfg.wordCountTtl)
+        sink.write(table(batch, "category"), s"${cfg.channel}_categoryCount",
+          SaveMode.Overwrite, cfg.categoryCountTtl)
+      } finally batch.unpersist()
+    }
+    (query, query)
   }
 }

@@ -31,6 +31,12 @@ object Bridge {
         throw new IllegalArgumentException(s"not a wrapped streaming query: ${other.getClass}")
     }
 
+  /** Number of entries in the session's `CacheManager` (the count is
+    * `private[sql]`) — for leak audits that compare it before and after.
+    */
+  def cachedEntries(spark: org.apache.spark.sql.SparkSession): Int =
+    spark.sharedState.cacheManager.numCachedEntries
+
   /** Register a temp SQL function on an existing session (the
     * functionRegistry is also `private[sql]`).
     */
