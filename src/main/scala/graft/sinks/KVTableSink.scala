@@ -39,10 +39,13 @@ trait KVTableSink extends Serializable {
 
 /** Parquet-directory store: one dir per table under `rootDir`.
   *
-  * Snapshot-overwrite is write-temp-then-swap so concurrent readers never
-  * observe a half-written table (the reference's per-batch Overwrite is
-  * not atomic — SURVEY.md §7.4 hard-part #1; this closes it for the
-  * single-writer case).
+  * Snapshot-overwrite writes the new table to a temp dir, then moves the
+  * old dir aside and the temp dir in (two `ATOMIC_MOVE`s), so the table
+  * dir never holds a half-written snapshot (the reference's per-batch
+  * Overwrite is not atomic — SURVEY.md §7.4 hard-part #1; single writer).
+  * Readers are not isolated from the swap: between the two moves the
+  * table dir is absent and `read` returns the empty frame, and a read
+  * planned before the swap can fail once the old dir is deleted.
   */
 final class ParquetKVSink(rootDir: String) extends KVTableSink {
   private def dir(table: String): Path = Paths.get(rootDir, table)
