@@ -1692,10 +1692,10 @@ object Similarity {
     * content no-op (idempotent; replay-safe at any point since the
     * original artifact is untouched until the final swap).
     *
-    * Concurrent-reader safety is the `ParquetKVSink` write-then-swap
-    * contract: the compacted artifact builds in a sibling temp dir and
-    * swaps in via two renames (single-writer; a reader that resolved
-    * the old path keeps reading its immutable files until the delete).
+    * Concurrent-reader safety is a write-then-swap: the compacted
+    * artifact builds in a sibling temp dir and swaps in via two renames
+    * (single-writer; a reader that resolved the old path keeps reading
+    * its immutable files until the delete).
     * All I/O goes through Hadoop's FileSystem, so the job runs on any
     * supported store (rename atomicity is the store's own contract —
     * atomic dir rename on HDFS/local, copy-based on S3A).

@@ -1,11 +1,18 @@
 package graft.sinks
 
 import graft.operators.KVTable
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, LinkOption, Path, Paths}
+import java.nio.file.StandardCopyOption.ATOMIC_MOVE
+import java.util.UUID
 import scala.collection.concurrent.TrieMap
+import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 /** Key-value table sink/store — the engine's replacement for the
@@ -37,41 +44,78 @@ trait KVTableSink extends Serializable {
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 }
 
-/** Parquet-directory store: one dir per table under `rootDir`.
+/** Parquet store: one table per `<rootDir>/<table>`, driver-sized by
+  * contract (the reference kept these tables in Redis hashes).
   *
-  * Snapshot-overwrite writes the new table to a temp dir, then moves the
-  * old dir aside and the temp dir in (two `ATOMIC_MOVE`s), so the table
-  * dir never holds a half-written snapshot (the reference's per-batch
-  * Overwrite is not atomic — SURVEY.md §7.4 hard-part #1; single writer).
-  * Readers are not isolated from the swap: between the two moves the
-  * table dir is absent and `read` returns the empty frame, and a read
-  * planned before the swap can fail once the old dir is deleted.
+  * Every `write` collects `df` once and writes it as ONE snappy Parquet
+  * file on the driver, through Spark's own `ParquetFileFormat` writer
+  * (same schema, row metadata and Hadoop `.crc` as `df.write.parquet`).
+  * The collect is `executedPlan.executeCollect()`, so a driver-local
+  * frame is written without starting a Spark job. `Append` keeps the
+  * live files (hard links) and adds one; any other mode replaces them.
+  *
+  * Versions: each write builds `<rootDir>/.<table>.v/<n>/` and then
+  * flips the symlink `<rootDir>/<table>` to it with one `ATOMIC_MOVE`,
+  * so the table path always names a complete snapshot and a reader
+  * never finds it missing (single writer). `read` resolves the link
+  * first, so a read planned on version n keeps reading version n; it
+  * stays on disk until version n + 2 is published, when every version
+  * older than the live one's predecessor is deleted. A real directory
+  * left at `<rootDir>/<table>` by the earlier layout is moved into the
+  * versions dir by the next write.
   */
 final class ParquetKVSink(rootDir: String) extends KVTableSink {
-  private def dir(table: String): Path = Paths.get(rootDir, table)
+  private def link(table: String): Path = Paths.get(rootDir, table)
+  private def versionsDir(table: String): Path = Paths.get(rootDir, s".$table.v")
 
-  override def write(df: DataFrame, table: String, mode: SaveMode, ttlSeconds: Int): Unit =
-    mode match {
-      case SaveMode.Overwrite =>
-        val tmp = Paths.get(rootDir, s".${table}_tmp_${System.nanoTime()}")
-        df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-        val target = dir(table)
-        val old = Paths.get(rootDir, s".${table}_old_${System.nanoTime()}")
-        if (Files.exists(target)) Files.move(target, old, StandardCopyOption.ATOMIC_MOVE)
-        Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
-        if (Files.exists(old)) deleteRecursively(old)
-      case m =>
-        df.write.mode(m).parquet(dir(table).toString)
-    }
+  override def write(df: DataFrame, table: String, mode: SaveMode, ttlSeconds: Int): Unit = {
+    val rows = df.queryExecution.executedPlan.executeCollect()
+    val versions = Files.createDirectories(versionsDir(table))
+    if (Files.isDirectory(link(table), LinkOption.NOFOLLOW_LINKS))
+      publish(table, Files.move(link(table), versions.resolve(nextVersion(versions)), ATOMIC_MOVE))
+    val live = Try(link(table).toRealPath()).toOption
+    val next = Files.createDirectory(versions.resolve(nextVersion(versions)))
+    if (mode == SaveMode.Append)
+      live.foreach(dir => list(dir).foreach(f => Files.createLink(next.resolve(f.getFileName), f)))
+    writeFile(df.sparkSession, df.schema, rows, next)
+    publish(table, next)
+    val keep = Set(next.getFileName) ++ live.map(_.getFileName)
+    list(versions).filterNot(v => keep(v.getFileName)).foreach(deleteRecursively)
+  }
 
   override def read(spark: SparkSession, table: String, schema: StructType): DataFrame =
-    Try(spark.read.schema(schema).parquet(dir(table).toString))
+    Try(spark.read.schema(schema).parquet(link(table).toRealPath().toString))
       .getOrElse(emptyFrame(spark, schema))
 
+  private def nextVersion(versions: Path): String =
+    (list(versions).flatMap(v => v.getFileName.toString.toLongOption).maxOption.getOrElse(-1L) + 1).toString
+
+  /** Point `<rootDir>/<table>` at `version`: a new relative link moved over the old one. */
+  private def publish(table: String, version: Path): Unit = {
+    val tmp = Paths.get(rootDir, s".$table.link")
+    Files.deleteIfExists(tmp)
+    Files.createSymbolicLink(tmp, Paths.get(rootDir).relativize(version))
+    Files.move(tmp, link(table), ATOMIC_MOVE)
+  }
+
+  /** One Parquet file of `rows` in `dir`, named as Spark names its part files. */
+  private def writeFile(spark: SparkSession, schema: StructType, rows: Array[InternalRow], dir: Path): Unit = {
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID("", 0, TaskType.MAP, 0, 0))
+    val file = dir.resolve(s"part-00000-${UUID.randomUUID()}-c000${factory.getFileExtension(ctx)}")
+    val writer = factory.newInstance(file.toUri.toString, schema, ctx)
+    try rows.foreach(writer.write) finally writer.close()
+  }
+
+  private def list(dir: Path): Seq[Path] = {
+    val s = Files.list(dir)
+    try s.iterator().asScala.toSeq finally s.close()
+  }
+
   private def deleteRecursively(p: Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (Files.exists(p))
-      Files.walk(p).iterator().asScala.toSeq.reverse.foreach(f => Files.deleteIfExists(f))
+    val s = Files.walk(p)
+    try s.iterator().asScala.toSeq.reverse.foreach(f => Files.deleteIfExists(f)) finally s.close()
   }
 }
 

@@ -22,8 +22,8 @@ import org.apache.spark.sql.types._
   * replaying the last unacknowledged batch does not double-count. (The
   * state write and the meta write are two separate atomic swaps, so a
   * crash BETWEEN them can still re-apply one batch — closing that needs
-  * a transactional store; `ParquetKVSink`'s temp-then-swap bounds the
-  * window to two renames.)
+  * a transactional store; `ParquetKVSink`'s versioned writes bound the
+  * window to the two symlink flips.)
   *
   * At 100 TB: the exact tier's state is fingerprints only (16 bytes +
   * id per distinct doc — text never enters the state), and the merge is

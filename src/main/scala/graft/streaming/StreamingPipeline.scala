@@ -4,9 +4,12 @@ import graft.classify.TextClassifier
 import graft.model.IrcParser
 import graft.operators.WordCount
 import graft.sinks.KVTableSink
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
+
+import scala.jdk.CollectionConverters._
 
 /** The reference's live topology (`/root/reference/src/main/scala/TwitchStream/SparkRunner.scala:51-165`)
   * re-expressed on Structured Streaming: one source of raw IRC lines →
@@ -130,9 +133,14 @@ object StreamingPipeline {
     * Each message's word keys and category keys are tagged and exploded
     * together as (`kind`, `key`) rows and counted by one
     * `groupBy(kind, key).count()` state operator, checkpointed at
-    * `<checkpointRoot>/counts`. Each trigger persists the snapshot once
-    * and writes `${channel}_wordcount` (`word`, `count`) and
-    * `${channel}_categoryCount` (`category`, `count`) from it.
+    * `<checkpointRoot>/counts`. Each trigger runs ONE Spark job: it
+    * collects the complete-mode snapshot (the action that runs the
+    * stateful plan), splits it by `kind` on the driver, and writes
+    * `${channel}_wordcount` (`word`, `count`) and
+    * `${channel}_categoryCount` (`category`, `count`) with one
+    * `sink.write` each, from driver-local frames. The snapshot is
+    * driver-sized, as every KV table is; a job per table write would
+    * cost more in job launch and task deserialization than the write.
     *
     * Returns the one query twice, as (wordcount, categoryCount), so
     * callers written against the two-query topology keep working:
@@ -154,20 +162,18 @@ object StreamingPipeline {
         tagged("word", wordKeys(text, cfg)), tagged("category", categoryKeys(text, clf)))))
       .groupBy("kind", "key")
       .count()
-    def table(batch: DataFrame, kind: String): DataFrame =
-      batch.where(col("kind") === kind).select(col("key").alias(kind), col("count"))
 
     val query = startComplete(counts, s"$checkpointRoot/counts",
       Trigger.ProcessingTime(cfg.batchInterval)) { batch =>
-      // both tables read the snapshot; without the persist the stateful
-      // plan would run once per table
-      batch.persist()
-      try {
-        sink.write(table(batch, "word"), s"${cfg.channel}_wordcount",
-          SaveMode.Overwrite, cfg.wordCountTtl)
-        sink.write(table(batch, "category"), s"${cfg.channel}_categoryCount",
-          SaveMode.Overwrite, cfg.categoryCountTtl)
-      } finally batch.unpersist()
+      // the collect is the trigger's one Spark job; each table is then a
+      // driver-local frame, which the sinks write without starting another
+      val rows = batch.collect()
+      def table(kind: String): DataFrame = batch.sparkSession.createDataFrame(
+        rows.collect { case Row(`kind`, key, count) => Row(key, count) }.toSeq.asJava,
+        StructType(Seq(batch.schema("key").copy(name = kind), batch.schema("count"))))
+      sink.write(table("word"), s"${cfg.channel}_wordcount", SaveMode.Overwrite, cfg.wordCountTtl)
+      sink.write(table("category"), s"${cfg.channel}_categoryCount",
+        SaveMode.Overwrite, cfg.categoryCountTtl)
     }
     (query, query)
   }
