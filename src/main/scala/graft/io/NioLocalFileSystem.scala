@@ -51,7 +51,7 @@ class NioRawLocalFileSystem extends RawLocalFileSystem {
   * [[NioRawLocalFileSystem]]. A rename onto an existing file returns
   * false and replaces nothing, as the `FileSystem` contract says and as
   * Hive's `ProxyLocalFileSystem` (what the Spark jars register for
-  * `file:` otherwise) does; `SearchIndex`'s sidecar publish expects it.
+  * `file:` otherwise) does; `LocalFileSystemSpec` pins it.
   */
 class NioLocalFileSystem extends LocalFileSystem(new NioRawLocalFileSystem) {
   override def rename(src: Path, dst: Path): Boolean = !isFile(dst) && super.rename(src, dst)

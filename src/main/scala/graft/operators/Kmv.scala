@@ -47,17 +47,6 @@ object Kmv {
           greatest(element_at(kmv, k), lit(1L)).cast("double")).cast("long"))
   }
 
-  /** Per-group estimates from a ROW-shaped minima state `(source, h)`
-    * — the streaming tier's persisted sketch
-    * ([[graft.streaming.DistStats]]): the ≤ k minima per source
-    * collect back into the sorted array (bounded by construction) and
-    * the estimator applies unchanged.
-    */
-  def estimateFromMinimaRows(state: DataFrame, k: Int): DataFrame =
-    state.groupBy("source")
-      .agg(sort_array(collect_list(col("h"))).alias("kmv"))
-      .select(col("source"), estimateFromSketch(col("kmv"), k).alias("est_distinct"))
-
   /** Per-source distinct-TOKEN profile with the exact control beside
     * the estimate: `(source, n_exact, est_distinct, err_permille)`.
     * The exact side is the full `count(DISTINCT token)` — the very

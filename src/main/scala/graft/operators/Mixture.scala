@@ -122,11 +122,9 @@ object Mixture {
     */
   /** The trainer + rate derivation over a COLLECTED per-source stats
     * table `(source, n_docs, quality_micro)` — the driver-side core
-    * [[learnedMixture]] runs, factored out so the STREAMING twin
-    * ([[graft.streaming.StreamMixture]]) re-learns the identical
-    * table from its live per-source state (bit-for-bit: stats sort
-    * source-ascending, the same integer-micro trainer, the same q73
-    * rate arithmetic). Returns
+    * [[learnedMixture]] runs. Deterministic given the stats: they sort
+    * source-ascending before the integer-micro trainer and the q73
+    * rate arithmetic. Returns
     * `(source, n_docs, quality_micro, weight_micro, n_target,
     * rate_pm)` rows.
     */

@@ -251,10 +251,9 @@ object QualityClassifier {
   }
 
   /** Persist trained weights as a tiny `(feat, w)` parquet — the
-    * frozen-model artifact (the `NgramLm.saveLm` convention): train
-    * once on a curated batch, freeze, then gate batch AND streaming
-    * corpora against the SAME weights. Width is implied by the row
-    * count on load.
+    * frozen-model artifact: train once on a curated batch, freeze, then
+    * gate batch AND streaming corpora against the SAME weights. Width
+    * is implied by the row count on load.
     */
   def saveWeights(
       spark: org.apache.spark.sql.SparkSession,
@@ -297,8 +296,8 @@ object QualityClassifier {
     * recall). A pure stateless projection+filter over each row (one
     * codegen scan: gopher-stats for the length bucket, `hashed_bow`,
     * `presence_dot` against the frozen weight literal), so it chains
-    * in front of `DedupIngest.startUnified` exactly like the rule
-    * gate — no state, no watermark, replay-safe. `dim` must match the
+    * in front of any streaming query exactly like the rule gate — no
+    * state, no watermark, replay-safe. `dim` must match the
     * training-time dimension (`weights.length == dim + 17` is
     * enforced — a silently mismatched hash space would score noise).
     */

@@ -100,21 +100,4 @@ object Snapshot {
     diff(oldSnap, newSnap, keyCol, contentCols)
       .filter(col("status") === "removed")
       .select(keyCol)
-
-  /** The retirement work list WITH content: the old-snapshot rows whose
-    * keys were removed — exactly what the index retirement paths
-    * consume ([[graft.streaming.SearchIndex.retire]] needs the retired
-    * rows' text to reverse the df/corpus-stats contributions;
-    * [[Similarity.removeFromIvfPqIndex]] only needs the keys). A
-    * semi-join of `oldSnap` against [[removedKeys]], the mirror of
-    * [[delta]]'s added/changed side.
-    */
-  def removedRows(
-      oldSnap: DataFrame,
-      newSnap: DataFrame,
-      keyCol: String,
-      contentCols: Seq[String]): DataFrame =
-    oldSnap.join(
-      removedKeys(oldSnap, newSnap, keyCol, contentCols),
-      Seq(keyCol), "left_semi")
 }

@@ -256,10 +256,8 @@ object TfIdf {
   /** Scan-side postings `(term, doc_id, dl, tf)` — the inverted-index
     * rows every BM25 surface consumes: one `term_counts` map per doc
     * (no token explode), `dl` a fold over its values, one output row
-    * per distinct (doc, term). Null-text docs emit nothing. Shared by
-    * [[bm25Join]] (inline, query-vocabulary-pruned) and the streaming
-    * index maintenance ([[graft.streaming.SearchIndex]], persisted
-    * per batch).
+    * per distinct (doc, term). Null-text docs emit nothing.
+    * [[bm25Join]] reads them inline, pruned to the query vocabulary.
     */
   // r22 MEASURED REJECTION: Skew.spreadIfNarrow(docs) in front of the
   // term_counts kernel (the q56 SRP pattern) was tried and REVERTED —
@@ -385,11 +383,10 @@ object TfIdf {
     *
     * Determinism: the same integer-micro mixing as [[hybridRerank]],
     * row-local per (qid, doc), ties by doc id. Candidate-rule caveat
-    * (inherited from [[bm25Join]], exactly like
-    * [[graft.streaming.SearchIndex.hybridSearch]]'s): a query's
-    * candidates are docs sharing ≥ 1 term with it, so per-query parity
-    * with [[hybridRank]] holds when the term-matching set covers the
-    * corpus or fills `candidates`. A candidate with no embedding row —
+    * (inherited from [[bm25Join]]): a query's candidates are docs
+    * sharing ≥ 1 term with it, so per-query parity with [[hybridRank]]
+    * holds when the term-matching set covers the corpus or fills
+    * `candidates`. A candidate with no embedding row —
     * or a query with a null vector — reranks on its lexical score
     * alone (cosine treated as 0). `qid`s must be unique in `queries`
     * (a duplicated qid with two vectors is ambiguous and would fan the
@@ -423,11 +420,8 @@ object TfIdf {
 
   /** [[hybridJoin]]'s rerank tail — lex candidates `(qid, doc_id,
     * bm25_micro)` (already bounded per query) + a `(qid, __qvec)` query
-    * table — shared with the streamed-artifact surface
-    * ([[graft.streaming.SearchIndex.hybridJoin]]), ONE definition so
-    * the mixing arithmetic cannot drift between the batch and
-    * streaming query-set surfaces (exactly [[hybridRerank]]'s role for
-    * the single-query pair).
+    * table: the query-set counterpart of [[hybridRerank]], with the
+    * same integer-micro mixing arithmetic.
     */
   private[graft] def hybridJoinRerank(
       lexIn: DataFrame,
@@ -483,12 +477,9 @@ object TfIdf {
         (col("hybrid_micro").cast("double") / lit(1000000.0)).alias("hybrid"))
   }
 
-  /** The rerank tail shared by [[hybridRank]] (corpus-scan candidates)
-    * and the streamed-artifact surface
-    * ([[graft.streaming.SearchIndex.hybridSearch]]): left-join the
-    * `(doc_id, bm25_micro)` candidates to the embedding side, combine
-    * as integer micros, TakeOrdered. ONE definition so the mixing
-    * arithmetic cannot drift between the batch and streaming surfaces.
+  /** [[hybridRank]]'s rerank tail over its corpus-scan candidates:
+    * left-join the `(doc_id, bm25_micro)` candidates to the embedding
+    * side, combine as integer micros, TakeOrdered.
     *
     * Scale shape: the embedding side is PRUNED FIRST — a broadcast
     * left-semi join of the (topK-bounded, so broadcastable by

@@ -91,10 +91,4 @@ private[graft] object Tombstones {
           df(idCol).cast(LongType) === t("__tomb_id"),
           "left_anti")
     }
-
-  /** True when the artifact carries live tombstones (compaction must
-    * fold even if the data layout is already fully compacted).
-    */
-  def exist(spark: SparkSession, fs: FileSystem, rootDir: String): Boolean =
-    read(spark, fs, rootDir).isDefined
 }

@@ -61,10 +61,9 @@ object Vocab {
   }
 
   /** The top-V/coverage tail over a PRE-AGGREGATED `(token, cnt)` table —
-    * the incremental-ingest hook: a maintained token-count state table
-    * (`TokenizerStats`) reads the same curve without re-scanning any
-    * corpus. `vocabularyFromTokens` is exactly this over a freshly
-    * aggregated stream.
+    * a maintained token-count table reads the same curve without
+    * re-scanning any corpus. `vocabularyFromTokens` is exactly this over
+    * a freshly aggregated stream.
     */
   def coverageFromCounts(
       countsIn: DataFrame, tokenCol: String, cntCol: String, topV: Int): DataFrame = {

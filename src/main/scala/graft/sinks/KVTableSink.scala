@@ -144,5 +144,4 @@ final class InMemoryKVSink extends KVTableSink {
     }
 
   def snapshot(table: String): Seq[Row] = tables.get(table).map(_.rows).getOrElse(Seq.empty)
-  def tableNames: Set[String] = tables.keySet.toSet
 }

@@ -71,68 +71,17 @@ object StreamingPipeline {
       .option("maxBufferedLines", cfg.maxBufferedLines.toString)
       .load()
 
-  /** Raw `value` lines → parsed message frame (columnar, codegen). */
-  def parse(lines: DataFrame): DataFrame = IrcParser.parse(lines)
-
-  /** Word keys of a message (A3): clean tokens longer than `minWordLength`. */
-  private def wordKeys(text: Column, cfg: Config): Column =
-    filter(WordCount.cleanTokens(text, cfg.language), w => length(w) > cfg.minWordLength)
-
-  /** Category keys of a message: its predicted labels. With the default
-    * keyword classifier this is the native `keyword_classify` expression,
-    * so the plan is UDF-free; an RPC-backed classifier falls back to the
-    * scalar UDF.
-    */
-  private def categoryKeys(text: Column, clf: TextClassifier): Column =
-    TextClassifier.asColumn(clf)(text)
-
-  /** Streaming running word counts (A3+A4): explode the word keys,
-    * unbounded `groupBy.count`. Catalyst plans partial + final hash
-    * aggregation into the state store — the map-side combine the
-    * reference hand-wrote with `reduceByKey` (`SparkRunner.scala:126`).
-    */
-  def wordCounts(messages: DataFrame, cfg: Config): DataFrame =
-    messages
-      .select(explode(wordKeys(col("text"), cfg)).alias("word"))
-      .groupBy("word")
-      .count()
-
-  /** Streaming running category counts: explode the category keys,
-    * unbounded `groupBy.count` (`SparkRunner.scala:82-118`).
-    */
-  def categoryCounts(messages: DataFrame, clf: TextClassifier): DataFrame =
-    messages
-      .select(explode(categoryKeys(col("text"), clf)).alias("category"))
-      .groupBy("category")
-      .count()
-
-  /** Start one running-total query writing `${channel}_<suffix>` snapshots
-    * (the reference's Redis table naming, `SparkRunner.scala:140-158`).
-    */
-  def startSnapshotQuery(
-      aggregated: DataFrame,
-      sink: KVTableSink,
-      table: String,
-      ttlSeconds: Int,
-      checkpointDir: String,
-      trigger: Trigger): StreamingQuery =
-    startComplete(aggregated, checkpointDir, trigger) { batch =>
-      sink.write(batch, table, SaveMode.Overwrite, ttlSeconds)
-    }
-
-  private def startComplete(aggregated: DataFrame, checkpointDir: String, trigger: Trigger)(
-      writeSnapshot: DataFrame => Unit): StreamingQuery =
-    aggregated.writeStream
-      .outputMode("complete")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch((batch: DataFrame, _: Long) => writeSnapshot(batch))
-      .start()
-
   /** Full topology: one complete-mode query over one scan of `lines`.
-    * Each message's word keys and category keys are tagged and exploded
-    * together as (`kind`, `key`) rows and counted by one
-    * `groupBy(kind, key).count()` state operator, checkpointed at
+    * A message's word keys are its clean tokens longer than
+    * `minWordLength` (A3); its category keys are its predicted labels,
+    * which with the default keyword classifier is the native
+    * `keyword_classify` expression, so the plan is UDF-free (an
+    * RPC-backed classifier falls back to the scalar UDF). Both are
+    * tagged and exploded together as (`kind`, `key`) rows and counted by
+    * one `groupBy(kind, key).count()` state operator — Catalyst plans
+    * partial + final hash aggregation into the state store, the
+    * map-side combine the reference hand-wrote with `reduceByKey`
+    * (`SparkRunner.scala:126`) — checkpointed at
     * `<checkpointRoot>/counts`. Each trigger runs ONE Spark job: it
     * collects the complete-mode snapshot (the action that runs the
     * stateful plan), splits it by `kind` on the driver, and writes
@@ -141,6 +90,8 @@ object StreamingPipeline {
     * `sink.write` each, from driver-local frames. The snapshot is
     * driver-sized, as every KV table is; a job per table write would
     * cost more in job launch and task deserialization than the write.
+    * Table names follow the reference's Redis naming
+    * (`SparkRunner.scala:140-158`).
     *
     * Returns the one query twice, as (wordcount, categoryCount), so
     * callers written against the two-query topology keep working:
@@ -155,16 +106,17 @@ object StreamingPipeline {
     def tagged(kind: String, keys: Column): Column =
       transform(keys, k => struct(lit(kind).alias("kind"), k.alias("key")))
     val text = col("text")
+    val wordKeys =
+      filter(WordCount.cleanTokens(text, cfg.language), w => length(w) > cfg.minWordLength)
     // null text yields null word keys and no category keys, so the null
     // concat drops nothing either table would have counted
-    val counts = parse(lines)
+    val counts = IrcParser.parse(lines)
       .select(inline(concat(
-        tagged("word", wordKeys(text, cfg)), tagged("category", categoryKeys(text, clf)))))
+        tagged("word", wordKeys), tagged("category", TextClassifier.asColumn(clf)(text)))))
       .groupBy("kind", "key")
       .count()
 
-    val query = startComplete(counts, s"$checkpointRoot/counts",
-      Trigger.ProcessingTime(cfg.batchInterval)) { batch =>
+    def writeSnapshot(batch: DataFrame): Unit = {
       // the collect is the trigger's one Spark job; each table is then a
       // driver-local frame, which the sinks write without starting another
       val rows = batch.collect()
@@ -175,6 +127,12 @@ object StreamingPipeline {
       sink.write(table("category"), s"${cfg.channel}_categoryCount",
         SaveMode.Overwrite, cfg.categoryCountTtl)
     }
+    val query = counts.writeStream
+      .outputMode("complete")
+      .option("checkpointLocation", s"$checkpointRoot/counts")
+      .trigger(Trigger.ProcessingTime(cfg.batchInterval))
+      .foreachBatch((batch: DataFrame, _: Long) => writeSnapshot(batch))
+      .start()
     (query, query)
   }
 }

@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.Path
 import java.nio.file.Files
 
 /** The write-then-swap protocol behind every compacted artifact
-  * (SearchIndex postings, IVF-PQ index): crash-stranded artifacts are
+  * (the IVF-PQ index): crash-stranded artifacts are
   * renamed back in NUMERIC stamp order, a live swap's marker makes
   * concurrent readers back off instead of racing the writer's second
   * rename, and a crashed swap's marker is adjudicated dead after the

@@ -4,7 +4,6 @@ import graft.SparkTestBase
 import graft.classify.{KeywordClassifier, Predictions}
 import graft.sinks.InMemoryKVSink
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.Trigger
 
 import java.nio.file.Files
 
@@ -21,19 +20,22 @@ class StreamingPipelineSpec extends SparkTestBase {
   private def line(user: String, chan: String, text: String) =
     s":$user!$user@$user.tmi.twitch.tv PRIVMSG #$chan :$text"
 
+  private val noCategories = KeywordClassifier(Seq.empty)
+
+  private def table(sink: InMemoryKVSink, name: String): Map[String, Long] =
+    sink.snapshot(name).map(r => r.getString(0) -> r.getLong(1)).toMap
+
   test("running word counts across batches: absent keeps, new initializes, multiplicity sums") {
     val input = MemoryStream[String](spark)
     val sink = new InMemoryKVSink
-    val cfg = StreamingPipeline.Config(channel = "test")
+    val cfg = StreamingPipeline.Config(channel = "test", batchInterval = "100 milliseconds")
     val ckpt = Files.createTempDirectory("graft-ckpt-wc").toString
 
-    val query = StreamingPipeline.startSnapshotQuery(
-      StreamingPipeline.wordCounts(StreamingPipeline.parse(input.toDF()), cfg),
-      sink, "test_wordcount", 0, ckpt, Trigger.ProcessingTime("100 milliseconds"))
+    val (query, _) = StreamingPipeline.start(input.toDF(), cfg, noCategories, sink, ckpt)
 
     def totals: Map[String, Long] = {
       query.processAllAvailable()
-      sink.snapshot("test_wordcount").map(r => r.getString(0) -> r.getLong(1)).toMap
+      table(sink, "test_wordcount")
     }
 
     input.addData(line("u1", "test", "hello hello world"))
@@ -55,41 +57,37 @@ class StreamingPipelineSpec extends SparkTestBase {
   test("checkpoint restart recovers running-count state (ST7)") {
     val input = MemoryStream[String](spark)
     val sink = new InMemoryKVSink
-    val cfg = StreamingPipeline.Config(channel = "rst")
+    val cfg = StreamingPipeline.Config(channel = "rst", batchInterval = "100 milliseconds")
+    val clf = KeywordClassifier(Seq("greek" -> Seq("alpha", "beta", "gamma")))
     val ckpt = Files.createTempDirectory("graft-ckpt-restart").toString
 
-    val q1 = StreamingPipeline.startSnapshotQuery(
-      StreamingPipeline.wordCounts(StreamingPipeline.parse(input.toDF()), cfg),
-      sink, "rst_wordcount", 0, ckpt, Trigger.ProcessingTime("100 milliseconds"))
+    val (q1, _) = StreamingPipeline.start(input.toDF(), cfg, clf, sink, ckpt)
     input.addData(line("u1", "rst", "alpha alpha beta"))
     q1.processAllAvailable()
-    assert(sink.snapshot("rst_wordcount").map(r => r.getString(0) -> r.getLong(1)).toMap
-      == Map("alpha" -> 2L, "beta" -> 1L))
+    assert(table(sink, "rst_wordcount") == Map("alpha" -> 2L, "beta" -> 1L))
+    assert(table(sink, "rst_categoryCount") == Map("greek" -> 1L))
     q1.stop()
 
-    // a NEW query from the SAME checkpoint must resume the state store,
-    // not restart counts from zero
-    val q2 = StreamingPipeline.startSnapshotQuery(
-      StreamingPipeline.wordCounts(StreamingPipeline.parse(input.toDF()), cfg),
-      sink, "rst_wordcount", 0, ckpt, Trigger.ProcessingTime("100 milliseconds"))
+    // a NEW query from the SAME checkpoint root must resume the state
+    // store for both tables, not restart counts from zero
+    val (q2, _) = StreamingPipeline.start(input.toDF(), cfg, clf, sink, ckpt)
     input.addData(line("u2", "rst", "beta gamma"))
     q2.processAllAvailable()
-    assert(sink.snapshot("rst_wordcount").map(r => r.getString(0) -> r.getLong(1)).toMap
-      == Map("alpha" -> 2L, "beta" -> 2L, "gamma" -> 1L))
+    assert(table(sink, "rst_wordcount") == Map("alpha" -> 2L, "beta" -> 2L, "gamma" -> 1L))
+    assert(table(sink, "rst_categoryCount") == Map("greek" -> 2L))
     q2.stop()
   }
 
   test("running category counts; keyword-classifier branch executes UDF-free (native keyword_classify)") {
     val input = MemoryStream[String](spark)
     val sink = new InMemoryKVSink
+    val cfg = StreamingPipeline.Config(channel = "test", batchInterval = "100 milliseconds")
     val clf = KeywordClassifier(Seq(
       "gaming" -> Seq("game", "play"),
       "music" -> Seq("song", "band")))
     val ckpt = Files.createTempDirectory("graft-ckpt-cc").toString
 
-    val query = StreamingPipeline.startSnapshotQuery(
-      StreamingPipeline.categoryCounts(StreamingPipeline.parse(input.toDF()), clf),
-      sink, "test_categoryCount", 0, ckpt, Trigger.ProcessingTime("100 milliseconds"))
+    val (query, _) = StreamingPipeline.start(input.toDF(), cfg, clf, sink, ckpt)
 
     input.addData(
       line("u1", "test", "what a great game to play"), // gaming: 2/2
@@ -97,10 +95,9 @@ class StreamingPipelineSpec extends SparkTestBase {
       line("u3", "test", "just a game"), // gaming: 1/2 = 0.5, NOT > 0.5
       line("u4", "test", "nothing relevant"))
     query.processAllAvailable()
-    val got = sink.snapshot("test_categoryCount").map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(got == Map("gaming" -> 1L, "music" -> 1L))
+    assert(table(sink, "test_categoryCount") == Map("gaming" -> 1L, "music" -> 1L))
 
-    // the category branch's EXECUTED micro-batch plan runs the native
+    // the topology's EXECUTED micro-batch plan runs the native
     // keyword_classify expression — no ScalaUDF boundary anywhere
     val plan = org.apache.spark.sql.graftbridge.Bridge.lastExecutedPlan(query).toString
     assert(plan.contains("keyword_classify"), plan)
@@ -126,10 +123,8 @@ class StreamingPipelineSpec extends SparkTestBase {
     input.addData(line("u1", "chan", "nice game indeed"))
     wc.processAllAvailable()
     cc.processAllAvailable()
-    val words = sink.snapshot("chan_wordcount").map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(words == Map("nice" -> 1L, "game" -> 1L, "indeed" -> 1L))
-    val cats = sink.snapshot("chan_categoryCount").map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(cats == Map("gaming" -> 1L))
+    assert(table(sink, "chan_wordcount") == Map("nice" -> 1L, "game" -> 1L, "indeed" -> 1L))
+    assert(table(sink, "chan_categoryCount") == Map("gaming" -> 1L))
     wc.stop(); cc.stop()
   }
 }
