@@ -1582,9 +1582,9 @@ object Similarity {
     * write and its batch-id bookkeeping — replaces its own files
     * instead of appending duplicates (a duplicated id would otherwise
     * permanently consume a top-k slot in every future
-    * [[ivfPqTopKFromIndex]] probe). Distinct deltas MUST use distinct
-    * batchIds (>= 0; the build owns -1), or the later one silently
-    * replaces the earlier.
+    * [[ivfPqTopKFromIndex]]/[[knnJoinFromIndex]] probe). Distinct
+    * deltas MUST use distinct batchIds (>= 0; the build owns -1), or
+    * the later one silently replaces the earlier.
     *
     * Null-vector rows are dropped and mixed-dimension deltas fail loud
     * per-row — same contract as [[buildIvfPqIndex]].
@@ -1593,9 +1593,9 @@ object Similarity {
     * index is append-only rows, not a keyed upsert — an id landed under
     * two batches (e.g. a doc re-embedded in a later delta) yields two
     * index rows, and each consumes a candidate/top-k slot in every
-    * future [[ivfPqTopKFromIndex]] probe (same-id rows are NOT deduped
-    * at query time; the scan is deliberately a pure partition-pruned
-    * read with no exchange). Re-embedding a live
+    * future [[ivfPqTopKFromIndex]]/[[knnJoinFromIndex]] probe (same-id
+    * rows are NOT deduped at query time; the scan is deliberately a
+    * pure partition-pruned read with no exchange). Re-embedding a live
     * id is a rebuild — or a same-batchId replacement, which dynamic
     * overwrite handles — not a new-batch append.
     */
@@ -1718,10 +1718,10 @@ object Similarity {
   /** Document RETIREMENT through a persisted IVF-PQ index
     * ([[graft.operators.Snapshot.removedKeys]]'s work list) — the
     * tombstone shape: the retired ids are APPENDED to the artifact's
-    * `_graft_tombstones` sidecar; [[ivfPqTopKFromIndex]] anti-probes
-    * the (takedown-sized, broadcast) list, and [[compactIvfPqIndex]]
-    * folds it into the full rewrite it performs anyway on the
-    * maintenance cadence. Retire latency
+    * `_graft_tombstones` sidecar; [[ivfPqTopKFromIndex]] and
+    * [[knnJoinFromIndex]] anti-probe the (takedown-sized, broadcast)
+    * list, and [[compactIvfPqIndex]] folds it into the full rewrite it
+    * performs anyway on the maintenance cadence. Retire latency
     * therefore tracks the TAKEDOWN size, not the artifact size
     * (pre-round-16, every takedown batch rewrote the entire code
     * table). Pass `compactNow = true` to chain the eager fold and
@@ -1883,6 +1883,103 @@ object Similarity {
       .select(col("id"), col("cos"))
       .orderBy(col("cos").desc, col("id").asc)
       .limit(k)
+  }
+
+  /** [[ivfKnnJoin]]'s join shape served by a PERSISTED
+    * [[buildIvfPqIndex]] artifact — no retraining, no corpus-wide cell
+    * assignment: the reopened model routes every query
+    * distributed-side (`nearest_cells`), and the index scan reads ONLY
+    * the probed cells' parquet partitions.
+    *
+    * Pruning is a STATIC pushed partition filter over the probed-cell
+    * UNION: one bounded aggregate over the query set (the union is at
+    * most `nLists` ints no matter how many queries there are — ≤ 2^16
+    * by the [[autoNLists]] cap), collected and pushed into the scan.
+    * Deterministic at any scale, where dynamic partition pruning would
+    * hinge on runtime cost heuristics.
+    *
+    * Exact scoring joins key on SCALARS only (cell, query id, corpus
+    * id); candidate and query vectors cross the wire once each as
+    * payload — AQE broadcasts the small side at small |Q|. Rows are
+    * identical to [[ivfKnnJoin]] run inline with the same
+    * (persisted → reopened, bit-exact) quantizer and `nProbe`.
+    *
+    * Assumes [[appendToIvfPqIndex]]'s id contract (ids disjoint across
+    * batches): the index scan reads all batches of the probed cells and
+    * does not dedup same-id rows — see the append's scaladoc.
+    */
+  def knnJoinFromIndex(
+      spark: org.apache.spark.sql.SparkSession,
+      path: String,
+      emb: DataFrame,
+      idCol: String,
+      vecCol: String,
+      queries: DataFrame,
+      qidCol: String,
+      qvecCol: String,
+      k: Int,
+      nProbe: Int = 2): DataFrame = {
+    require(k > 0 && nProbe > 0, s"need k > 0 and nProbe > 0, got k=$k nProbe=$nProbe")
+    val (centroids, _) = readIvfPqModel(spark, path)
+    require(nProbe <= centroids.length,
+      s"nProbe=$nProbe > nLists=${centroids.length} in the persisted index")
+    require(qidCol != idCol && qvecCol != vecCol,
+      s"query column names must differ from corpus ($qidCol/$idCol, $qvecCol/$vecCol)")
+    import spark.implicits._
+
+    // the query set and its routing are each consumed TWICE (queries:
+    // routing + the exact-scoring vector join; probes: the collected
+    // probed-cell union + the candidate join) — materialize each once.
+    // Beyond the doubled scan, this is a CORRECTNESS guard: with a
+    // non-deterministic `queries` (sample(), rand-filtered) a re-run of
+    // the routing could reach a cell the collected union missed, and
+    // the index filter would then silently drop those candidates.
+    val q0 = queries.select(col(qidCol), col(qvecCol)).localCheckpoint(true)
+    val probes = q0.select(
+      col(qidCol),
+      explode(
+        graft.functions.expressions.NearestCellsExpr
+          .nearestCells(col(qvecCol), centroids, nProbe)).as("cell"))
+      .localCheckpoint(true)
+
+    val probedCells = probes.select("cell").distinct().as[Int].collect().toSeq
+
+    val hRoot = new org.apache.hadoop.fs.Path(path)
+    val fs = hRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val index =
+      // fully-retired-then-compacted artifact (model only, no cell
+      // partitions): a valid empty-answer state, typed off the corpus
+      // frame so the downstream joins keep their schemas
+      if (fs.globStatus(new org.apache.hadoop.fs.Path(s"$path/cell=*")).isEmpty)
+        emb.select(col(idCol).alias("id")).limit(0).withColumn("cell", lit(0))
+      else
+        // retirement tombstones anti-probed inline (takedown-sized,
+        // broadcast) — retired rows never become candidates
+        Tombstones.mask(
+          spark.read.parquet(path)
+            .filter(col("cell").isInCollection(probedCells))
+            .select(col("id"), col("cell")),
+          "id", spark, fs, path)
+
+    val cand = probes.join(index, Seq("cell")).select(col(qidCol), col("id"))
+
+    val cos = nanDiv(
+      graft.functions.expressions.DotProductFloat.dotF(col(qvecCol), col(vecCol)),
+      graft.functions.expressions.Norm2Float.norm2F(col(qvecCol)) *
+        graft.functions.expressions.Norm2Float.norm2F(col(vecCol)))
+
+    val scored = cand
+      .join(q0, Seq(qidCol))
+      .join(emb.select(col(idCol).alias("id"), col(vecCol)), Seq("id"))
+      .select(col(qidCol), col("id").alias(idCol), cos.alias("cos"))
+
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col(qidCol))
+      .orderBy(col("cos").desc, col(idCol).asc)
+    scored
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= k)
+      .drop("rn")
   }
 
   /** The asymmetric-distance score column: each subspace's inner-product

@@ -100,4 +100,21 @@ object Snapshot {
     diff(oldSnap, newSnap, keyCol, contentCols)
       .filter(col("status") === "removed")
       .select(keyCol)
+
+  /** The retirement work list WITH content: the old-snapshot rows whose
+    * keys were removed — what a retirement path needs when it must
+    * reverse a retired row's content contribution (a text index's
+    * df/corpus stats), where [[Similarity.removeFromIvfPqIndex]] only
+    * needs the keys. A
+    * semi-join of `oldSnap` against [[removedKeys]], the mirror of
+    * [[delta]]'s added/changed side.
+    */
+  def removedRows(
+      oldSnap: DataFrame,
+      newSnap: DataFrame,
+      keyCol: String,
+      contentCols: Seq[String]): DataFrame =
+    oldSnap.join(
+      removedKeys(oldSnap, newSnap, keyCol, contentCols),
+      Seq(keyCol), "left_semi")
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
 /** Lower-level stateful running counts via `flatMapGroupsWithState` —
-  * the explicit-state form of [[StreamingPipeline.wordCounts]]'s
+  * the explicit-state form of [[StreamingPipeline.start]]'s counting
   * aggregation (SURVEY.md §2.4 A4 maps `updateStateByKey` to streaming
   * `groupBy.sum`; this is the noted `mapGroupsWithState` alternative,
   * needed only when state wants semantics the aggregate can't express —

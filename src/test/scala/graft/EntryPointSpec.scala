@@ -11,6 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * source file is reachable from one of them. Scratch mains, hand-copied
   * session builders and code no run reaches drift from the settings the
   * tests and the benchmark run with; this keeps them from coming back.
+  * The one exception is a closed list of three streaming operators that
+  * only their specs run.
   */
 class EntryPointSpec extends AnyFunSuite {
 
@@ -83,6 +85,12 @@ class EntryPointSpec extends AnyFunSuite {
       }
     val entries = types.collect { case (f, t) if (t & rootTypes).nonEmpty => f }.toSet
     val reached = reach(entries, entries)
-    assert(types.map(_._1).filterNot(reached).sorted == Nil)
+    // the chat topology's counts and dedup in other state shapes
+    // (explicit per-key state, event-time windows, fingerprint dedup):
+    // no entry point runs them, their specs pin them. Exact equality, so
+    // a new unreached file fails here, and so does a listed one that an
+    // entry point starts to reach or that is deleted
+    val specOnly = List("StatefulCounts.scala", "StreamingDedup.scala", "WindowedCounts.scala")
+    assert(types.map(_._1).filterNot(reached).sorted == specOnly)
   }
 }

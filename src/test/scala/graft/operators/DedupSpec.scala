@@ -193,6 +193,36 @@ class DedupSpec extends SparkTestBase {
     assert(got(30L) == ((0L, 30L, 1L)), got(30L)) // unique survivor
   }
 
+  test("incrementalNearDupIndexed over persisted band/set state equals the text path, reading no corpus text") {
+    val corpusDocs = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog"),
+      (2L, "completely different content about spark engines and pipelines")
+    ).toDF("doc_id", "text")
+    val batchDocs = Seq(
+      (10L, "the quick brown fox jumps over the lazy dog"),
+      (20L, "streaming ingestion keeps corpus state tables fresh across batches"),
+      (21L, "streaming ingestion keeps corpus state tables fresh across batches"),
+      (30L, "a totally novel document with its own vocabulary entirely")
+    ).toDF("doc_id", "text")
+    val viaText = Dedup.incrementalNearDup(
+      batchDocs, corpusDocs, "doc_id", "text", n = 3, k = 16, bands = 4, threshold = 0.5)
+      .as[(Long, Long, Long, Long)].collect().toSet
+
+    // persist ONLY the index tables — the corpus text is not on disk at
+    // all, so the indexed path provably can't consult it
+    val dir = java.nio.file.Files.createTempDirectory("graft-nd-idx").toString
+    Dedup.bandTable(corpusDocs, "doc_id", "text", n = 3, k = 16, bands = 4)
+      .write.parquet(s"$dir/bands")
+    Dedup.shingleSetTable(corpusDocs, "doc_id", "text", n = 3)
+      .write.parquet(s"$dir/sets")
+    val viaIndex = Dedup.incrementalNearDupIndexed(
+      batchDocs,
+      spark.read.parquet(s"$dir/bands"),
+      spark.read.parquet(s"$dir/sets"),
+      "doc_id", "text", n = 3, k = 16, bands = 4, threshold = 0.5)
+    assert(viaIndex.as[(Long, Long, Long, Long)].collect().toSet == viaText)
+  }
+
   test("simHashPairs: identical docs at distance 0") {
     val pairs = Dedup.simHashPairs(corpus, "doc_id", "text", maxDistance = 3)
       .as[(Long, Long, Int)].collect()

@@ -187,6 +187,37 @@ class NgramLmSpec extends SparkTestBase {
     assert(a === c)
   }
 
+  test("saveLm/loadLm roundtrip scores identically to the in-plan LM") {
+    val docs = corpus((8L, "the cat sat"), (9L, "zzz qqq vvv"), (18L, "sat dog"))
+    val lm = NgramLm.train(docs.filter("doc_id % 10 < 8"), "doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("ngram-lm").toString
+    NgramLm.saveLm(lm, dir)
+    val reloaded = NgramLm.loadLm(spark, dir)
+    val heldout = docs.filter("doc_id % 10 >= 8")
+    val direct = NgramLm.score(heldout, "doc_id", "text", lm)
+      .select("doc_id", "n_bigrams", "nll_micro")
+      .as[(Long, Long, Long)].collect().toSet
+    val frozen = NgramLm.score(heldout, "doc_id", "text", reloaded)
+      .select("doc_id", "n_bigrams", "nll_micro")
+      .as[(Long, Long, Long)].collect().toSet
+    assert(direct === frozen)
+    assert(direct.nonEmpty)
+  }
+
+  test("keepByQuality drops the worst-fit doc, keeps in-domain and unscorable docs") {
+    val docs = corpus(
+      (8L, "the cat sat"), // in-domain
+      (9L, "zzz qqq vvv www yyy"), // all-OOV junk
+      (18L, "one")) // unscorable: single token
+    val lm = NgramLm.train(docs.filter("doc_id % 10 < 8"), "doc_id", "text")
+    // cutoff between the in-domain score (~ln(3/5)≈-0.5) and the OOV
+    // floor (ln(0.4/24) ≈ -4.1)
+    val kept = NgramLm.keepByQuality(
+        docs.filter("doc_id % 10 >= 8"), "doc_id", "text", lm, cutoff = -3.0)
+      .select("doc_id").as[Long].collect().toSet
+    assert(kept === Set(8L, 18L))
+  }
+
   test("worse-fitting text scores lower (more negative avg) than in-domain text") {
     val out = NgramLm.perplexity(
       corpus((8L, "the cat sat"), (9L, "zzz qqq vvv")), "doc_id", "text")

@@ -504,6 +504,19 @@ class SimilaritySpec extends SparkTestBase {
     assert(gotA.forall(r => !removedSet(r._1)), s"retired id served from the index: $gotA")
     assert(gotA == top(dirB), "retired index diverged from the same-model survivor append")
 
+    // kNN-join parity through the mask: retired ids never become
+    // candidates, and results equal the survivor-append index's
+    val queries = embR.filter(col("vec_id").isin(1L, 7L))
+      .select(col("vec_id").alias("qid"), col("embedding").alias("qvec"))
+    def knn(dir: String): Set[(Long, Long, Double)] =
+      Similarity.knnJoinFromIndex(
+        spark, dir, embR, "vec_id", "embedding", queries, "qid", "qvec",
+        k = 8, nProbe = 4)
+        .as[(Long, Long, Double)].collect().toSet
+    val knnA = knn(dirA)
+    assert(knnA.forall(r => !removedSet(r._2)), s"retired id in kNN join: $knnA")
+    assert(knnA == knn(dirB), "kNN join through tombstones diverged from survivor append")
+
     // idempotent at the semantics level: a crash-replay of the removal
     // changes neither the artifact nor any answer
     Similarity.removeFromIvfPqIndex(spark, dirA, removedIds, "vec_id")
@@ -516,7 +529,8 @@ class SimilaritySpec extends SparkTestBase {
       "compaction did not fold the tombstones into the rewrite")
     assert(!new java.io.File(dirA, "_graft_tombstones").exists(),
       "compacted artifact still carries the tombstone sidecar")
-    assert(top(dirA) == gotA, "answers changed when the tombstones folded")
+    assert(top(dirA) == gotA && knn(dirA) == knnA,
+      "answers changed when the tombstones folded")
 
     // compactNow = the pre-tombstone eager behavior: physical purge in
     // the retire call itself
@@ -533,6 +547,7 @@ class SimilaritySpec extends SparkTestBase {
     Similarity.removeFromIvfPqIndex(
       spark, dirC, embR.select("vec_id"), "vec_id", compactNow = true)
     assert(top(dirC).isEmpty, "fully-retired index did not answer empty top-k")
+    assert(knn(dirC).isEmpty, "fully-retired index did not answer empty kNN join")
     // and compacting the empty artifact again is a quiet no-op
     Similarity.compactIvfPqIndex(spark, dirC)
     assert(top(dirC).isEmpty)
@@ -647,6 +662,65 @@ class SimilaritySpec extends SparkTestBase {
       if (t == null) Nil else t +: causes(t.getCause)
     assert(causes(e).exists(c => Option(c.getMessage).exists(_.contains("!= index dim"))),
       s"expected the per-row dim error, got: $e")
+  }
+
+  test("knnJoinFromIndex: rows identical to the inline join; scan pruned to the probed-cell union") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+
+    val embR = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val dir = java.nio.file.Files.createTempDirectory("graft-knn-index").toString
+    val (nLists, nProbe, k) = (16, 3, 5)
+    Similarity.buildIvfPqIndex(
+      embR, "vec_id", "embedding", dir,
+      nLists = nLists, m = 16, nCodes = 64, trainSample = 2048)
+
+    val queries = embR.filter(col("vec_id") % 100 === 0)
+      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+    val fromIndex = Similarity.knnJoinFromIndex(
+      spark, dir, embR, "vec_id", "embedding", queries, "qid", "qvec", k, nProbe)
+    val gotIndex = fromIndex.as[(Long, Long, Double)].collect()
+      .sortBy(r => (r._1, r._2)).toSeq
+
+    // the reopened model is bit-exact, so the inline join over the SAME
+    // persisted centroids must return identical rows (ids AND cos bits)
+    val (centroids, _) = Similarity.readIvfPqModel(spark, dir)
+    val inline = Similarity.knnJoinWithCentroids(
+      embR, "vec_id", "embedding", queries, "qid", "qvec", k, nProbe, centroids)
+      .as[(Long, Long, Double)].collect().sortBy(r => (r._1, r._2)).toSeq
+    assert(gotIndex == inline, s"index join diverged:\n$gotIndex\nvs inline:\n$inline")
+
+    // the index scan reads exactly the probed-cell UNION's partitions —
+    // strictly fewer than the full artifact
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case s: QueryStageExec => scans(s.plan)
+      case f: FileSourceScanExec => Seq(f)
+      case other => other.children.flatMap(scans)
+    }
+    val indexScans = scans(fromIndex.queryExecution.executedPlan)
+      .filter(_.relation.location.rootPaths.exists(_.toString.contains(dir)))
+    assert(indexScans.nonEmpty, fromIndex.queryExecution.executedPlan.toString)
+    val scan = indexScans.head
+    assert(scan.partitionFilters.exists(_.references.exists(_.name == "cell")),
+      s"no partition filter on cell: ${scan.partitionFilters}")
+    // Spark ALSO inserts a dynamic-pruning subquery from the cell join;
+    // it can't be evaluated outside execution, so count partitions under
+    // the static pushed filter alone (the deterministic pruning bound)
+    val staticFilters = scan.partitionFilters.filterNot(_.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.DynamicPruningExpression]))
+    assert(staticFilters.exists(_.references.exists(_.name == "cell")),
+      s"no STATIC partition filter on cell: ${scan.partitionFilters}")
+    val partitionsRead = scan.relation.location
+      .listFiles(staticFilters, scan.dataFilters).length
+    val cellDirs = new java.io.File(dir).listFiles().count(_.getName.startsWith("cell="))
+    val unionCells = queries
+      .select(org.apache.spark.sql.functions.explode(
+        graft.functions.expressions.NearestCellsExpr
+          .nearestCells(col("qvec"), centroids, nProbe)).as("cell"))
+      .distinct().count().toInt
+    assert(partitionsRead == unionCells && partitionsRead < cellDirs,
+      s"read $partitionsRead partitions, union=$unionCells, total=$cellDirs")
   }
 
   test("nearest_cells: ascending by distance, head = nearest_cell, ties to lowest index") {

@@ -52,6 +52,16 @@ class SnapshotSpec extends SparkTestBase {
     assert(fwd != rev)
   }
 
+  test("removedRows returns the retired OLD-snapshot rows with content, removedKeys just the keys") {
+    val keys = Snapshot.removedKeys(oldSnap, newSnap, "doc_id", Seq("source", "text"))
+      .as[Long].collect().toSet
+    assert(keys == Set(3L))
+    val rows = Snapshot.removedRows(oldSnap, newSnap, "doc_id", Seq("source", "text"))
+      .as[(Long, Option[String], Option[String])].collect().toSeq
+    assert(rows == Seq((3L, Some("gamma"), Some("src1"))),
+      s"retirement work list must be the full old rows: $rows")
+  }
+
   test("diff of a snapshot against itself is empty") {
     assert(Snapshot.diff(oldSnap, oldSnap, "doc_id", Seq("source", "text")).count() == 0L)
   }
