@@ -120,7 +120,7 @@ object C4CleanExpr {
     var start = 0
     val n = s.length
     while (start <= n) {
-      var end = s.indexOf('\n', start)
+      val end = s.indexOf('\n', start)
       val lineEnd = if (end < 0) n else end
       nLines += 1L
       // right-trim space/tab/CR

@@ -446,8 +446,8 @@ object Dedup {
     * is the near-dup index an ingest pipeline stores alongside the
     * corpus (each doc pays its `bands` rows once, at admission; store
     * bucketed by `(band, key)` and the candidate join is
-    * co-partitioned), so checking a new batch never re-hashes corpus
-    * text — see [[incrementalNearDupIndexed]].
+    * co-partitioned). [[incrementalNearDup]] builds it for both the
+    * batch and the corpus side.
     */
   def bandTable(
       docs: DataFrame,
@@ -467,14 +467,6 @@ object Dedup {
         col("band"),
         md5(concat_ws("_", slice(col("sig"), col("band") * rows + 1, lit(rows)))).alias("key"))
   }
-
-  /** `(id, hs)` sorted distinct shingle-hash sets — [[bandTable]]'s
-    * verify-stage sidecar: persisting both lets an ingest pipeline run
-    * the exact-Jaccard confirmation against state instead of re-shingling
-    * corpus text per trigger.
-    */
-  def shingleSetTable(docs: DataFrame, idCol: String, textCol: String, n: Int = 3): DataFrame =
-    shingleSets(docs, idCol, textCol, n)
 
   /** MinHash + banded LSH near-dup pairs, verified with exact Jaccard.
     *
@@ -522,12 +514,8 @@ object Dedup {
     * batch is near-dup-checked against the existing corpus WITHOUT any
     * corpus×corpus comparison, then near-dup-deduplicated within itself.
     *
-    * Mechanics: MinHash band keys on BOTH sides ([[bandTable]] — the
-    * corpus band table is the persistable index; at 100 TB it is stored
-    * bucketed by `(band, key)` so the candidate join is co-partitioned,
-    * and a sustained ingest threads the PERSISTED band/set tables in via
-    * [[incrementalNearDupIndexed]] instead of recomputing them from
-    * corpus text per call); candidates are
+    * Mechanics: MinHash band keys on BOTH sides ([[bandTable]], the
+    * corpus side recomputed from its text on every call); candidates are
     * batch×corpus band-key collisions only, each verified with the exact
     * shingle-set Jaccard (no false positives — same verify kernel as
     * [[minHashLsh]]; false negatives bounded by the (k, bands) collision
@@ -550,77 +538,7 @@ object Dedup {
       n: Int = 3,
       k: Int = 16,
       bands: Int = 4,
-      threshold: Double = 0.8): DataFrame =
-    incrementalNearDupFrom(
-      batch, idCol, textCol, n, k, bands, threshold,
-      // corpus band keys recomputed from text on every call: the corpus
-      // pays one band-key scan per trigger (MinHash over full text).
-      // Acceptable for one-shot batch use; a STREAMING caller should
-      // persist the band/set tables and use incrementalNearDupIndexed
-      // instead, which reads state and never re-hashes corpus text.
-      bandTable(corpus, idCol, textCol, n, k, bands),
-      // corpus shingle sets ONLY for the band-collision candidates (a
-      // handful of ids per batch): computing them corpus-wide would
-      // re-hash far more text to verify a few pairs. Single plan
-      // position, so no materialization either — only candidates pay
-      // the shingle-set verify. The candidate frame's lineage is a
-      // localCheckpoint (no stats), so the semi-join needs the
-      // explicit broadcast — without it the planner hash-exchanges
-      // the ENTIRE corpus text on id to meet a handful of candidate
-      // ids (the q115/q117 hint-class defect; the registry-wide text
-      // sweep now fails on it)
-      candIds =>
-        shingleSets(
-          corpus.join(
-            broadcast(candIds.withColumnRenamed("id", idCol)),
-            Seq(idCol), "left_semi"),
-          idCol, textCol, n))
-
-  /** [[incrementalNearDup]] against a PREBUILT corpus index — the
-    * delta-over-state form a streaming ingest needs: the corpus side is
-    * its persisted [[bandTable]] rows `(id, band, key)` and
-    * [[shingleSetTable]] sets `(id, hs)`, so a trigger's plan reads NO
-    * corpus text at all — candidate-gen joins the batch's band keys
-    * against the band state, and the exact-Jaccard verify fetches the
-    * stored shingle sets for the band-collision candidate ids only
-    * (semi-join-pruned). Per-trigger compute is proportional to the
-    * batch; the corpus-side cost is one band-state scan (scalar rows)
-    * plus the candidates' set rows.
-    */
-  def incrementalNearDupIndexed(
-      batch: DataFrame,
-      corpusBands: DataFrame,
-      corpusSets: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int = 3,
-      k: Int = 16,
-      bands: Int = 4,
-      threshold: Double = 0.8): DataFrame =
-    incrementalNearDupFrom(
-      batch, idCol, textCol, n, k, bands, threshold,
-      corpusBands,
-      // broadcast for the same reason as incrementalNearDup's lambda:
-      // trigger-bounded candidate ids vs the corpus-scale set state —
-      // un-hinted, the whole (id, hs) state would hash-exchange to
-      // meet them
-      candIds => corpusSets.join(broadcast(candIds), Seq("id"), "left_semi"))
-
-  /** Shared core of the two incremental near-dup forms. `corpusBands`
-    * supplies the corpus `(id, band, key)` rows; `corpusSetsFor` maps a
-    * single-column `(id)` frame of candidate ids to their `(id, hs)`
-    * shingle sets.
-    */
-  private def incrementalNearDupFrom(
-      batch: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int,
-      k: Int,
-      bands: Int,
-      threshold: Double,
-      corpusBands: DataFrame,
-      corpusSetsFor: DataFrame => DataFrame): DataFrame = {
+      threshold: Double = 0.8): DataFrame = {
     require(bands > 0 && k % bands == 0, s"bands must divide k, got k=$k bands=$bands")
     // batch side only: batch ids are cast to long for the state/output;
     // corpus ids are never cast here (they only key the candidate and
@@ -635,16 +553,33 @@ object Dedup {
     val setsB = materializedShingleSets(batch, idCol, textCol, n)
 
     // batch×corpus: band-key collisions, exact-Jaccard verified. The
-    // corpus side shuffles on (band, key) once — scalar band rows, never
-    // text, never against itself. Materialized: feeds the candidate-id
+    // corpus pays one band-key scan (MinHash over full text) per call,
+    // then shuffles on (band, key) once — scalar band rows, never text,
+    // never against itself. Materialized: feeds the candidate-id
     // semi-join below AND the verify join.
+    val corpusBands = bandTable(corpus, idCol, textCol, n, k, bands)
     val candC = bandB.alias("x")
       .join(corpusBands.alias("y"), Seq("band", "key"))
       .select(col("x.id").alias("id_b"), col("y.id").alias("id_c"))
       .distinct()
       .localCheckpoint(true)
 
-    val setsC = corpusSetsFor(candC.select(col("id_c").alias("id")).distinct())
+    // corpus shingle sets ONLY for the band-collision candidates (a
+    // handful of ids per batch): computing them corpus-wide would
+    // re-hash far more text to verify a few pairs. Single plan
+    // position, so no materialization either — only candidates pay
+    // the shingle-set verify. The candidate frame's lineage is a
+    // localCheckpoint (no stats), so the semi-join needs the
+    // explicit broadcast — without it the planner hash-exchanges
+    // the ENTIRE corpus text on id to meet a handful of candidate
+    // ids (the q115/q117 hint-class defect; the registry-wide text
+    // sweep now fails on it)
+    val candIds = candC.select(col("id_c").alias("id")).distinct()
+    val setsC = shingleSets(
+      corpus.join(
+        broadcast(candIds.withColumnRenamed("id", idCol)),
+        Seq(idCol), "left_semi"),
+      idCol, textCol, n)
     val hits = candC
       .join(setsB.toDF("id_b", "hs_b"), Seq("id_b"))
       .join(setsC.toDF("id_c", "hs_c"), Seq("id_c"))
@@ -1261,8 +1196,8 @@ object Dedup {
     * per-domain hot-segment fingerprints once (on yesterday's crawl, a
     * curated slice, or a scheduled batch pass) and hand the table to
     * [[applyBoilerplateProfile]], which applies it STATELESSLY to any
-    * corpus, batch or streaming (the `ArtifactSwap` pattern: profiles
-    * refresh on their own cadence, appliers never re-aggregate). Same
+    * corpus, batch or streaming (profiles refresh on their own cadence,
+    * appliers never re-aggregate). Same
     * page-presence rule as [[domainBoilerplate]]; fingerprints are
     * `md5_hash60` longs (sortable, 8 bytes, binary-searchable row-side
     * — and re-derivable in the DuckDB oracle). Emits `(domain, fp)`.

@@ -49,8 +49,6 @@ import org.apache.spark.sql.functions._
   */
 object EmbeddingProbe {
 
-  private val Micro = 1000000L
-
   /** Per-row quantized feature codes + binary label: one native scan of
     * `embs` producing `(idCol, y: long 0/1, codes: array<tinyint>)` —
     * int8 codes ++ the bias code (1).

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFunctions
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** N-gram language-model perplexity scoring — the CCNet-style quality
@@ -29,10 +29,6 @@ import org.apache.spark.sql.functions._
   *    order; the integer sum is exact and order-independent, so the
   *    output is reproducible run-to-run and hash-comparable against
   *    any engine that evaluates the same per-term expression.
-  *  - [[saveLm]]/[[loadLm]] persist the three count tables as parquet —
-  *    the FROZEN-model deployment: every later batch is scored against
-  *    the same persisted LM, so training stays a batch decision, taken
-  *    on corpus drift.
   *
   * Smoothing is Stupid Backoff (Brants et al. 2007, "Large Language
   * Models in Machine Translation"): score(w2|w1) = c(w1 w2)/c(w1) when
@@ -90,23 +86,6 @@ object NgramLm {
       .groupBy("w1", "w2").agg(count(lit(1)).alias("c12"))
     LmTables(uni, bi, nTok)
   }
-
-  /** Persist the LM as three parquet tables under `path`
-    * (`uni/`, `bi/`, `meta/`) — the frozen-model artifact a quality
-    * gate reads per batch.
-    */
-  def saveLm(lm: LmTables, path: String): Unit = {
-    lm.uni.write.mode("overwrite").parquet(s"$path/uni")
-    lm.bi.write.mode("overwrite").parquet(s"$path/bi")
-    lm.nTok.write.mode("overwrite").parquet(s"$path/meta")
-  }
-
-  /** Load a [[saveLm]] artifact. */
-  def loadLm(spark: SparkSession, path: String): LmTables =
-    LmTables(
-      spark.read.parquet(s"$path/uni"),
-      spark.read.parquet(s"$path/bi"),
-      spark.read.parquet(s"$path/meta"))
 
   /** Decides the skew-hardened mode's hot-set size from the LM's OWN
     * count tables — `hotKeys = -1`'s resolution path, so a user does
@@ -286,26 +265,6 @@ object NgramLm {
           col("n_bigrams").cast("double")).alias("avg_nll"))
   }
 
-  /** The quality-gate filter: drop rows of `docs` whose `avg_nll`
-    * against `lm` falls below `cutoff` (more negative = worse fit).
-    * Unscorable docs (fewer than two tokens) are KEPT — a perplexity
-    * gate has no evidence against them; compose a length predicate
-    * upstream when short docs should die too. Pure function of
-    * (docs, lm, cutoff), so a replayed batch gets the same answer.
-    */
-  def keepByQuality(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      lm: LmTables,
-      cutoff: Double,
-      backoff: Double = 0.4): DataFrame = {
-    val dropIds = score(docs, idCol, textCol, lm, backoff)
-      .filter(col("avg_nll") < cutoff)
-      .select(col("doc_id").alias(idCol))
-    docs.join(dropIds, Seq(idCol), "left_anti")
-  }
-
   /** Stupid-Backoff NLL per held-out document with an in-plan
     * deterministic corpus split: `id % splitMod < trainBelow` trains
     * the LM, the rest is scored (see [[train]]/[[score]] — this is
@@ -409,8 +368,8 @@ object NgramLm {
   }
 
   /** [[importanceSelect]] against EXPLICIT target and raw LMs — the
-    * deployment form: train once on curated slices, [[saveLm]] both,
-    * then select from any candidate corpus. Priorities are
+    * deployment form: train once on curated slices, then select from
+    * any candidate corpus. Priorities are
     * row-intrinsic, so a top-k over them is the same draw however the
     * candidates are batched.
     */

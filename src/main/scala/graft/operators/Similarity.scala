@@ -335,9 +335,7 @@ object Similarity {
     * Shape, and why it survives 100 TB:
     *
     *  - the corpus is assigned its cell ONCE in a fused native
-    *    projection (`nearest_cell`) — the same `(id, cell)` artifact the
-    *    persisted-index path writes, so at scale the right-hand side is
-    *    a reopened cell-partitioned table, not a rescan;
+    *    projection (`nearest_cell`), one scan of the corpus per join;
     *  - each query row expands to its `nProbe` probe cells with the
     *    native `nearest_cells` routing expression (the DISTRIBUTED twin
     *    of the driver-side routing in [[ivfTopK]] — query sets are NOT
@@ -506,8 +504,6 @@ object Similarity {
       nLists: Int,
       seed: Long,
       trainSample: Int): Array[Array[Double]] = {
-    val spark = emb.sparkSession
-    import spark.implicits._
     // dim probe before the collect so the budget can bound the sample —
     // null vectors are filtered out of the probe (a null sampled row
     // would make size() yield SQL NULL and getInt throw an opaque NPE)
@@ -890,7 +886,7 @@ object Similarity {
       assigned: DataFrame,
       maxCellRows: Int,
       caller: String,
-      remedy: String = defaultRemedy): DataFrame = {
+      remedy: String): DataFrame = {
     val cellCounts = assigned.groupBy("cell").agg(count(lit(1)).alias("m"))
     val hot = cellCounts.filter(col("m") > maxCellRows).limit(1).collect()
     if (hot.nonEmpty)
@@ -1390,16 +1386,13 @@ object Similarity {
     * and the top `rerank` candidates re-rank against exact vectors for
     * the final cosine order.
     *
-    * Scale shape: ONE corpus scan builds the index artifact a
-    * deployment persists — `(id, cell, code)`, an int + `m` bytes per
-    * row, both columns from native codegen expressions in the same
-    * fused projection (float vectors stay in cold storage for the
-    * re-rank fetch); [[buildIvfPqIndex]] persists exactly this artifact
-    * partitioned by cell and [[ivfPqTopKFromIndex]] reopens it with a
-    * partition-pruned probe scan. A query then (a) routes driver-side
-    * over `nLists` centroids, (b) scans ≈ `nProbe/nLists` of the CODE
-    * table (partition-pruned over the persisted index) at `m`
-    * byte-lookups per row into a `TakeOrderedAndProject` — per-partition
+    * Scale shape: ONE corpus scan builds the index rows — `(id, cell,
+    * code)`, an int + `m` bytes per row, both columns from native
+    * codegen expressions in the same fused projection (float vectors
+    * are read again only for the re-rank fetch). A query then (a)
+    * routes driver-side over `nLists` centroids, (b) keeps the
+    * ≈ `nProbe/nLists` of the CODE rows in the probed cells and scores
+    * them at `m` byte-lookups per row into a `TakeOrderedAndProject` — per-partition
     * heaps, no sort, no shuffle, (c) re-ranks ≤ `rerank` rows fetched
     * by id through a BROADCAST join against the vector table. Nothing
     * shuffles at any step.
@@ -1431,7 +1424,7 @@ object Similarity {
     val codebooks = trainProductQuantizer(
       emb, idCol, vecCol, dim, m, nCodes, seed, trainSample)
 
-    // the persisted-artifact scan: cell + code in one fused projection
+    // cell + code in one fused projection
     val indexed = emb.select(
       col(idCol).alias("id"),
       graft.functions.expressions.NearestCellExpr
@@ -1458,9 +1451,7 @@ object Similarity {
 
   /** Driver-side coarse routing: indices of the `n` centroids nearest to
     * `query` (squared euclidean; stable sort, so distance ties break to
-    * the lowest cell index). Shared by the inline and persisted-index
-    * query paths — the arithmetic must stay identical so both probe the
-    * same cells.
+    * the lowest cell index).
     */
   private def nearestCentroids(
       centroids: Array[Array[Double]],
@@ -1475,511 +1466,6 @@ object Similarity {
     centroids.zipWithIndex
       .map { case (c, i) => (i, sqdist(c)) }
       .sortBy(_._2).take(n).map(_._1).toSeq
-  }
-
-  // ==== persisted IVF-PQ index ==============================================
-
-  /** Child dir holding the trained model next to the index rows —
-    * underscore-prefixed, so the main parquet read never lists it.
-    */
-  private val IvfPqModelDir = "_graft_ivfpq_model"
-
-  /** The model-sidecar directory name inside an index artifact — for
-    * callers that need an existence probe (bootstrap-vs-append).
-    */
-  private[graft] def ivfPqModelDirName: String = IvfPqModelDir
-
-  /** Builds and PERSISTS the IVF-PQ index artifact that [[ivfPqTopK]]
-    * computes inline: `(id, code)` parquet PARTITIONED BY `cell`, so a
-    * probe scan is partition-pruned to the `nProbe` probed cells (the
-    * pushed partition filter skips every other cell's files at listing
-    * time — the scan reads `≈ nProbe/nLists` of the bytes no matter how
-    * big the corpus). The trained model (coarse centroids + PQ
-    * codebooks) is stored alongside under [[IvfPqModelDir]] as a
-    * single-row parquet, so queries reopen the index WITHOUT retraining
-    * or touching the float vectors.
-    *
-    * Training, assignment and encoding are the exact arithmetic of
-    * [[ivfPqTopK]] (same seed → same centroids/codebooks, doubles
-    * round-trip parquet bit-exactly), so a query over the reopened index
-    * returns IDENTICAL rows to the inline path on the same corpus.
-    *
-    * At 100 TB: one corpus scan writes the artifact (an int + `m` bytes
-    * per row); per-cell file sizing follows from the write parallelism,
-    * and re-ingest batches land as `batch=` sub-partitions inside the
-    * cell directories ([[appendToIvfPqIndex]] — the build itself writes
-    * `batch=-1`; queries prune on `cell` only and never read the batch
-    * column).
-    *
-    * Null-vector rows are DROPPED, not indexed: a null vector has no
-    * cell and no code, so it would land as an unqueryable
-    * default-partition junk row that inflates every artifact count
-    * without ever being probed. Mixed-dimension corpora fail loud
-    * per-row (not just on a sampled row): a wider vector would
-    * otherwise be silently prefix-encoded.
-    */
-  def buildIvfPqIndex(
-      emb: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String,
-      nLists: Int = 16,
-      m: Int = 8,
-      nCodes: Int = 256,
-      seed: Long = 42L,
-      trainSample: Int = 4096): Unit = {
-    require(nLists > 0 && m > 0, s"need nLists > 0 and m > 0, got $nLists, $m")
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val centroids = trainCentroids(emb, idCol, vecCol, nLists, seed, trainSample)
-    val dim = centroids.head.length
-    val codebooks = trainProductQuantizer(
-      emb, idCol, vecCol, dim, m, nCodes, seed, trainSample)
-    indexRows(emb, idCol, vecCol, centroids, codebooks, path)
-      .withColumn("batch", lit(-1L))
-      .write.mode("overwrite")
-      // STATIC overwrite regardless of the session's
-      // partitionOverwriteMode: a rebuild must clear every old cell dir —
-      // under dynamic mode, cells absent from the new data would keep
-      // rows encoded with the PREVIOUS model's codebooks
-      .option("partitionOverwriteMode", "static")
-      .partitionBy("cell", "batch").parquet(path)
-    // model AFTER the index rows: the static overwrite above clears `path`
-    writeIvfPqModel(spark, path, centroids, codebooks)
-  }
-
-  private def writeIvfPqModel(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      centroids: Array[Array[Double]],
-      codebooks: Array[Array[Array[Double]]]): Unit = {
-    import spark.implicits._
-    Seq(IvfPqIndexModel(
-      dim = centroids.head.length,
-      subDim = codebooks.head.head.length,
-      centroidsFlat = centroids.flatten,
-      codebookSizes = codebooks.map(_.length),
-      codebookFlat = codebooks.flatten.flatten))
-      .toDS().coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/$IvfPqModelDir")
-  }
-
-  /** Appends a new batch of vectors to an EXISTING [[buildIvfPqIndex]]
-    * artifact: the batch is routed and encoded with the PERSISTED model
-    * (no retraining — cell assignments and codes stay consistent with
-    * every row already in the index), and the new `(id, code)` rows land
-    * under `cell=<c>/batch=<batchId>` partitions of the artifact. This
-    * is the re-ingest shape: at 100 TB the nightly embedding delta
-    * appends in one scan while queries keep partition-pruning over the
-    * union (`cell` stays the leading partition column; `batch` is never
-    * read). (Re-train + full rebuild only when drift degrades recall —
-    * the model sidecar makes the two artifacts interchangeable.)
-    *
-    * `batchId` makes the append IDEMPOTENT: the write is a DYNAMIC
-    * partition overwrite of exactly the `(cell, batch=batchId)`
-    * partitions this delta produces, so re-running the same delta —
-    * e.g. a streaming trigger replayed after a crash between the index
-    * write and its batch-id bookkeeping — replaces its own files
-    * instead of appending duplicates (a duplicated id would otherwise
-    * permanently consume a top-k slot in every future
-    * [[ivfPqTopKFromIndex]]/[[knnJoinFromIndex]] probe). Distinct
-    * deltas MUST use distinct batchIds (>= 0; the build owns -1), or
-    * the later one silently replaces the earlier.
-    *
-    * Null-vector rows are dropped and mixed-dimension deltas fail loud
-    * per-row — same contract as [[buildIvfPqIndex]].
-    *
-    * ID CONTRACT: ids must be DISJOINT ACROSS DISTINCT batchIds. The
-    * index is append-only rows, not a keyed upsert — an id landed under
-    * two batches (e.g. a doc re-embedded in a later delta) yields two
-    * index rows, and each consumes a candidate/top-k slot in every
-    * future [[ivfPqTopKFromIndex]]/[[knnJoinFromIndex]] probe (same-id
-    * rows are NOT deduped at query time; the scan is deliberately a
-    * pure partition-pruned read with no exchange). Re-embedding a live
-    * id is a rebuild — or a same-batchId replacement, which dynamic
-    * overwrite handles — not a new-batch append.
-    */
-  def appendToIvfPqIndex(
-      emb: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String,
-      batchId: Long): Unit = {
-    require(batchId >= 0, s"batchId must be >= 0 (the build owns -1), got $batchId")
-    // layout guard: an artifact with the legacy single-level `cell=X/`
-    // layout (no batch sub-partitions) would ACCEPT this two-level
-    // append and only fail later, at query time, with a conflicting-
-    // directory-structures error — i.e. the append would brick the
-    // artifact silently. Detect it here and fail loud instead.
-    val hRoot = new org.apache.hadoop.fs.Path(path)
-    val hFs = hRoot.getFileSystem(emb.sparkSession.sparkContext.hadoopConfiguration)
-    if (hFs.exists(hRoot)) {
-      // probing ONE cell dir suffices: an artifact is written whole by
-      // either the legacy or the batched writer, so layouts are
-      // homogeneous — and listing every cell dir would be O(nLists)
-      // remote list calls per append (65k at the autoNLists cap)
-      hFs.listStatus(hRoot)
-        .find(s => s.isDirectory && s.getPath.getName.startsWith("cell="))
-        .foreach { cd =>
-          require(
-            !hFs.listStatus(cd.getPath)
-              .exists(s => s.isFile && s.getPath.getName.endsWith(".parquet")),
-            s"appendToIvfPqIndex: $path uses the legacy cell-only layout " +
-              s"(parquet files directly under ${cd.getPath.getName}); rebuild " +
-              "the index with buildIvfPqIndex before appending batches")
-        }
-    }
-    // an all-null (or empty) delta is almost certainly an upstream
-    // failure, not an intentional no-op append — keep the loud error
-    // (the streaming tier pre-checks and never calls with one). The
-    // probe selects the vector column alone so the scan is
-    // column-pruned and short-circuits at the first non-null row; only
-    // the error path (genuinely all-null) pays a full pass.
-    require(
-      emb.select(col(vecCol)).filter(col(vecCol).isNotNull).head(1).nonEmpty,
-      "appendToIvfPqIndex: no non-null vectors in the delta")
-    val (centroids, codebooks) = readIvfPqModel(emb.sparkSession, path)
-    indexRows(emb, idCol, vecCol, centroids, codebooks, path)
-      .withColumn("batch", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cell", "batch").parquet(path)
-  }
-
-  /** Compacts an IVF-PQ index artifact's accumulated streaming deltas:
-    * every `(cell, batch)` partition — the per-trigger appends of
-    * [[appendToIvfPqIndex]] plus any `batch=-1` base — rewrites into
-    * the base `batch=-1` layout with ONE write task per cell, so the
-    * partition/file count collapses back to ≈ the number of occupied
-    * cells. This is the maintenance job a long-running append loop
-    * needs: without it each append adds one small file per touched cell
-    * and the artifact degrades into the classic streaming-lakehouse
-    * many-small-files state (every probe pays per-file open/footer
-    * costs that eventually dwarf the data read).
-    *
-    * Codes are REWRITTEN VERBATIM — no re-routing, no re-encoding, the
-    * model sidecar is copied byte-for-byte — so a partition-pruned
-    * query over the compacted artifact returns row-identical results
-    * (spec-pinned), and compacting an already-compacted artifact is a
-    * content no-op (idempotent; replay-safe at any point since the
-    * original artifact is untouched until the final swap).
-    *
-    * Concurrent-reader safety is a write-then-swap: the compacted
-    * artifact builds in a sibling temp dir and swaps in via two renames
-    * (single-writer; a reader that resolved the old path keeps reading
-    * its immutable files until the delete).
-    * All I/O goes through Hadoop's FileSystem, so the job runs on any
-    * supported store (rename atomicity is the store's own contract —
-    * atomic dir rename on HDFS/local, copy-based on S3A).
-    *
-    * WRITER serialization is the caller's job: never run this
-    * out-of-band against a LIVE ingest — a trigger that appends and
-    * acks between this job's read and its swap would have its rows
-    * silently deleted (the ack then blocks the replay that would
-    * restore them). Use the in-trigger hooks
-    * (`startAnnIndex(compactEvery)` / `startUnified(annCompactEvery)`),
-    * which run after the batch ack on the stream's own thread.
-    */
-  def compactIvfPqIndex(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(conf)
-    ArtifactSwap.recover(fs, root, "compactIvfPqIndex", sweep = true)
-    val model = new org.apache.hadoop.fs.Path(s"$path/$IvfPqModelDir")
-    require(fs.exists(model),
-      s"compactIvfPqIndex: no IVF-PQ artifact at $path (missing $IvfPqModelDir)")
-    // a fully-retired-then-folded artifact is model-sidecar-only (no
-    // cell partitions): nothing to fold, and a parquet read of it has
-    // no schema to infer — maintenance no-op, not an error
-    if (fs.globStatus(new org.apache.hadoop.fs.Path(s"$path/cell=*")).isEmpty) return
-    val stamp = ArtifactSwap.newStamp()
-    val tmp = ArtifactSwap.tmpPath(root, stamp)
-    // one shuffle on the scalar cell id: each write task owns whole
-    // cells, so every occupied cell lands as one file under batch=-1.
-    // [[removeFromIvfPqIndex]]'s tombstones fold in here: retired rows
-    // are anti-joined out of the rewrite and the swapped-in
-    // replacement carries no sidecar
-    Tombstones.mask(
-      spark.read.parquet(path)
-        .select(col("id"), col("code"), col("cell")),
-      "id", spark, fs, path)
-      .repartition(col("cell"))
-      .withColumn("batch", lit(-1L))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "static")
-      .partitionBy("cell", "batch").parquet(tmp.toString)
-    require(
-      org.apache.hadoop.fs.FileUtil.copy(fs, model, fs,
-        new org.apache.hadoop.fs.Path(s"$tmp/$IvfPqModelDir"), false, conf),
-      s"compactIvfPqIndex: copying the model sidecar to $tmp failed")
-    ArtifactSwap.swap(fs, root, stamp, "compactIvfPqIndex")
-  }
-
-  /** Document RETIREMENT through a persisted IVF-PQ index
-    * ([[graft.operators.Snapshot.removedKeys]]'s work list) — the
-    * tombstone shape: the retired ids are APPENDED to the artifact's
-    * `_graft_tombstones` sidecar; [[ivfPqTopKFromIndex]] and
-    * [[knnJoinFromIndex]] anti-probe the (takedown-sized, broadcast)
-    * list, and [[compactIvfPqIndex]] folds it into the full rewrite it
-    * performs anyway on the maintenance cadence. Retire latency
-    * therefore tracks the TAKEDOWN size, not the artifact size
-    * (pre-round-16, every takedown batch rewrote the entire code
-    * table). Pass `compactNow = true` to chain the eager fold and
-    * physically purge the rows immediately (the old behavior, for
-    * erasure-deadline callers).
-    *
-    * The trained model sidecar is untouched throughout: quantization
-    * cells are a PROPERTY OF THE MODEL, not of corpus membership, so
-    * surviving rows' cells/codes — and therefore every query's ADC
-    * scan and exact re-rank — are bit-identical to an index whose
-    * survivors were appended under the same model. (A model retrained
-    * on the survivors would re-cluster; that is a rebuild, not a
-    * retirement.)
-    *
-    * Idempotent at the semantics level (the mask and the fold are
-    * anti-joins — duplicate tombstone ids change nothing), so it needs
-    * no ack and is safe to re-run after a crash at any point.
-    * Single-writer: run on the maintenance thread that owns the
-    * artifact, never concurrently with a live append. Caveat shared
-    * with the postings tier: a RETIRED id must not be re-appended
-    * before a compaction folds its tombstone, or the mask hides the
-    * new rows too.
-    */
-  def removeFromIvfPqIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      removed: DataFrame,
-      removedIdCol: String,
-      compactNow: Boolean = false): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(conf)
-    ArtifactSwap.recover(fs, root, "removeFromIvfPqIndex", sweep = true)
-    val model = new org.apache.hadoop.fs.Path(s"$path/$IvfPqModelDir")
-    require(fs.exists(model),
-      s"removeFromIvfPqIndex: no IVF-PQ artifact at $path (missing $IvfPqModelDir)")
-    // the tombstone store keys on longs; a non-numeric id would
-    // null-cast into a mask that silently keeps the retired rows
-    Dedup.requireNumericId(removed, removedIdCol, "removeFromIvfPqIndex")
-    Tombstones.append(removed, removedIdCol, path)
-    if (compactNow) compactIvfPqIndex(spark, path)
-  }
-
-  /** The `(id, cell, code)` projection both index writers share:
-    * null vectors filtered out, every surviving vector dim-checked
-    * PER ROW (a wider vector would silently prefix-encode; a shorter
-    * one would read garbage in the cell router), then routed + encoded
-    * in one fused scan.
-    */
-  private def indexRows(
-      emb: DataFrame,
-      idCol: String,
-      vecCol: String,
-      centroids: Array[Array[Double]],
-      codebooks: Array[Array[Array[Double]]],
-      path: String): DataFrame = {
-    val dim = centroids.head.length
-    val checkedVec = when(size(col(vecCol)) === dim, col(vecCol))
-      .otherwise(raise_error(concat(
-        lit(s"IVF-PQ index at $path: vector dim "),
-        size(col(vecCol)).cast("string"),
-        lit(s" != index dim $dim"))))
-    emb.filter(col(vecCol).isNotNull)
-      .select(
-        col(idCol).alias("id"),
-        graft.functions.expressions.NearestCellExpr
-          .nearestCell(checkedVec, centroids).alias("cell"),
-        graft.functions.expressions.PqEncodeExpr
-          .pqEncode(checkedVec, codebooks).alias("code"))
-  }
-
-  /** Reopens a [[buildIvfPqIndex]] artifact's trained model. Runs the
-    * compaction-swap recovery first: a crash inside
-    * [[compactIvfPqIndex]]'s rename window strands the whole artifact
-    * in its hidden `old` dir, and since every index consumer (append,
-    * top-k, kNN join) opens the model through here, this is the choke
-    * point that heals it before anything reads — or worse, writes a
-    * fresh root that would orphan history.
-    */
-  private[graft] def readIvfPqModel(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): (Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    import spark.implicits._
-    val hRoot = new org.apache.hadoop.fs.Path(path)
-    // read-side recovery: rename-back only, never sweep — top-k/kNN
-    // readers run concurrently with a live compaction by contract
-    ArtifactSwap.recover(
-      hRoot.getFileSystem(spark.sparkContext.hadoopConfiguration),
-      hRoot, "readIvfPqModel", sweep = false)
-    val m = spark.read.parquet(s"$path/$IvfPqModelDir").as[IvfPqIndexModel].head()
-    val centroids = m.centroidsFlat.grouped(m.dim).toArray
-    val cbs = new Array[Array[Array[Double]]](m.codebookSizes.length)
-    var off = 0
-    var s = 0
-    while (s < m.codebookSizes.length) {
-      val len = m.codebookSizes(s) * m.subDim
-      cbs(s) = java.util.Arrays.copyOfRange(m.codebookFlat, off, off + len)
-        .grouped(m.subDim).toArray
-      off += len
-      s += 1
-    }
-    (centroids, cbs)
-  }
-
-  /** [[ivfPqTopK]]'s query path over a PERSISTED index — no training, no
-    * corpus scan: (a) the reopened model routes driver-side, (b) the
-    * code scan reads ONLY the `nProbe` probed cells' parquet partitions
-    * (pushed partition filter — plan-audited in `SimilaritySpec`) into a
-    * `TakeOrderedAndProject`, (c) the ≤ `rerank` survivors re-rank
-    * against exact vectors through a broadcast join. Results are
-    * row-identical to the inline [[ivfPqTopK]] on the same corpus and
-    * parameters.
-    */
-  def ivfPqTopKFromIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      emb: DataFrame,
-      idCol: String,
-      vecCol: String,
-      query: Seq[Double],
-      k: Int,
-      nProbe: Int = 2,
-      rerank: Int = 0): DataFrame = {
-    require(k > 0 && nProbe > 0, s"need k > 0 and nProbe > 0, got k=$k nProbe=$nProbe")
-    val (centroids, codebooks) = readIvfPqModel(spark, path)
-    val dim = centroids.head.length
-    require(query.length == dim, s"query dim ${query.length} != index dim $dim")
-    require(nProbe <= centroids.length,
-      s"nProbe=$nProbe > nLists=${centroids.length} in the persisted index")
-    val rer = if (rerank > 0) rerank else math.max(10 * k, 100)
-    val probeCells = nearestCentroids(centroids, query.toArray, nProbe)
-
-    val hRoot = new org.apache.hadoop.fs.Path(path)
-    val fs = hRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a fully-retired-then-compacted artifact keeps its model sidecar
-    // but holds zero cell partitions — a valid state with an empty
-    // answer, not a schema-inference crash
-    if (fs.globStatus(new org.apache.hadoop.fs.Path(s"$path/cell=*")).isEmpty)
-      return emb
-        .select(col(idCol).alias("id"), col(vecCol).alias("vec"))
-        .limit(0)
-        .transform(withCosine(_, "vec", query))
-        .select(col("id"), col("cos"))
-
-    // retirement tombstones anti-probed BEFORE the rerank cut, so
-    // retired rows neither surface nor occupy candidate slots —
-    // row-parity with an index whose survivors were appended fresh
-    val cand = Tombstones.mask(
-      spark.read.parquet(path).filter(col("cell").isInCollection(probeCells)),
-      "id", spark, fs, path)
-      .select(col("id"), pqAdcScoreCol(col("code"), codebooks, query).alias("score"))
-      .orderBy(col("score").desc, col("id").asc)
-      .limit(rer)
-
-    emb
-      .select(col(idCol).alias("id"), col(vecCol).alias("vec"))
-      .join(broadcast(cand.select("id")), Seq("id"))
-      .transform(withCosine(_, "vec", query))
-      .select(col("id"), col("cos"))
-      .orderBy(col("cos").desc, col("id").asc)
-      .limit(k)
-  }
-
-  /** [[ivfKnnJoin]]'s join shape served by a PERSISTED
-    * [[buildIvfPqIndex]] artifact — no retraining, no corpus-wide cell
-    * assignment: the reopened model routes every query
-    * distributed-side (`nearest_cells`), and the index scan reads ONLY
-    * the probed cells' parquet partitions.
-    *
-    * Pruning is a STATIC pushed partition filter over the probed-cell
-    * UNION: one bounded aggregate over the query set (the union is at
-    * most `nLists` ints no matter how many queries there are — ≤ 2^16
-    * by the [[autoNLists]] cap), collected and pushed into the scan.
-    * Deterministic at any scale, where dynamic partition pruning would
-    * hinge on runtime cost heuristics.
-    *
-    * Exact scoring joins key on SCALARS only (cell, query id, corpus
-    * id); candidate and query vectors cross the wire once each as
-    * payload — AQE broadcasts the small side at small |Q|. Rows are
-    * identical to [[ivfKnnJoin]] run inline with the same
-    * (persisted → reopened, bit-exact) quantizer and `nProbe`.
-    *
-    * Assumes [[appendToIvfPqIndex]]'s id contract (ids disjoint across
-    * batches): the index scan reads all batches of the probed cells and
-    * does not dedup same-id rows — see the append's scaladoc.
-    */
-  def knnJoinFromIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      emb: DataFrame,
-      idCol: String,
-      vecCol: String,
-      queries: DataFrame,
-      qidCol: String,
-      qvecCol: String,
-      k: Int,
-      nProbe: Int = 2): DataFrame = {
-    require(k > 0 && nProbe > 0, s"need k > 0 and nProbe > 0, got k=$k nProbe=$nProbe")
-    val (centroids, _) = readIvfPqModel(spark, path)
-    require(nProbe <= centroids.length,
-      s"nProbe=$nProbe > nLists=${centroids.length} in the persisted index")
-    require(qidCol != idCol && qvecCol != vecCol,
-      s"query column names must differ from corpus ($qidCol/$idCol, $qvecCol/$vecCol)")
-    import spark.implicits._
-
-    // the query set and its routing are each consumed TWICE (queries:
-    // routing + the exact-scoring vector join; probes: the collected
-    // probed-cell union + the candidate join) — materialize each once.
-    // Beyond the doubled scan, this is a CORRECTNESS guard: with a
-    // non-deterministic `queries` (sample(), rand-filtered) a re-run of
-    // the routing could reach a cell the collected union missed, and
-    // the index filter would then silently drop those candidates.
-    val q0 = queries.select(col(qidCol), col(qvecCol)).localCheckpoint(true)
-    val probes = q0.select(
-      col(qidCol),
-      explode(
-        graft.functions.expressions.NearestCellsExpr
-          .nearestCells(col(qvecCol), centroids, nProbe)).as("cell"))
-      .localCheckpoint(true)
-
-    val probedCells = probes.select("cell").distinct().as[Int].collect().toSeq
-
-    val hRoot = new org.apache.hadoop.fs.Path(path)
-    val fs = hRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val index =
-      // fully-retired-then-compacted artifact (model only, no cell
-      // partitions): a valid empty-answer state, typed off the corpus
-      // frame so the downstream joins keep their schemas
-      if (fs.globStatus(new org.apache.hadoop.fs.Path(s"$path/cell=*")).isEmpty)
-        emb.select(col(idCol).alias("id")).limit(0).withColumn("cell", lit(0))
-      else
-        // retirement tombstones anti-probed inline (takedown-sized,
-        // broadcast) — retired rows never become candidates
-        Tombstones.mask(
-          spark.read.parquet(path)
-            .filter(col("cell").isInCollection(probedCells))
-            .select(col("id"), col("cell")),
-          "id", spark, fs, path)
-
-    val cand = probes.join(index, Seq("cell")).select(col(qidCol), col("id"))
-
-    val cos = nanDiv(
-      graft.functions.expressions.DotProductFloat.dotF(col(qvecCol), col(vecCol)),
-      graft.functions.expressions.Norm2Float.norm2F(col(qvecCol)) *
-        graft.functions.expressions.Norm2Float.norm2F(col(vecCol)))
-
-    val scored = cand
-      .join(q0, Seq(qidCol))
-      .join(emb.select(col(idCol).alias("id"), col(vecCol)), Seq("id"))
-      .select(col(qidCol), col("id").alias(idCol), cos.alias("cos"))
-
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(qidCol))
-      .orderBy(col("cos").desc, col(idCol).asc)
-    scored
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .drop("rn")
   }
 
   /** The asymmetric-distance score column: each subspace's inner-product
@@ -2006,17 +1492,3 @@ object Similarity {
     graft.functions.expressions.PqAdcScoreExpr.pqAdcScore(code, lut)
   }
 }
-
-/** The trained IVF-PQ model as persisted next to the index rows by
-  * [[Similarity.buildIvfPqIndex]]: coarse centroids flattened row-major
-  * (`nLists × dim`) and the per-subspace PQ codebooks flattened in
-  * subspace order (`codebookSizes(s)` centroids of `subDim` doubles
-  * each). Doubles round-trip parquet bit-exactly, so the reopened model
-  * reproduces the inline path's scores to the last bit.
-  */
-final case class IvfPqIndexModel(
-    dim: Int,
-    subDim: Int,
-    centroidsFlat: Array[Double],
-    codebookSizes: Array[Int],
-    codebookFlat: Array[Double])

@@ -68,9 +68,9 @@ object Snapshot {
   }
 
   /** The refresh WORK LIST a diff implies: the new-snapshot rows whose
-    * keys were added or changed — exactly what the incremental tiers
-    * (dedup state, search index, ANN index) must process, instead of
-    * the whole new snapshot. A semi-join of `newSnap` against the diff
+    * keys were added or changed — exactly what an incremental refresh
+    * (e.g. `Dedup.incrementalNearDup`) must process, instead of the
+    * whole new snapshot. A semi-join of `newSnap` against the diff
     * keys, so full rows (with content) come back but nothing is
     * duplicated or widened. `delta ∪ unchanged-rows = newSnap`
     * partition-exactly, and `|delta|` — not `|newSnap|` — is what the
@@ -100,21 +100,4 @@ object Snapshot {
     diff(oldSnap, newSnap, keyCol, contentCols)
       .filter(col("status") === "removed")
       .select(keyCol)
-
-  /** The retirement work list WITH content: the old-snapshot rows whose
-    * keys were removed — what a retirement path needs when it must
-    * reverse a retired row's content contribution (a text index's
-    * df/corpus stats), where [[Similarity.removeFromIvfPqIndex]] only
-    * needs the keys. A
-    * semi-join of `oldSnap` against [[removedKeys]], the mirror of
-    * [[delta]]'s added/changed side.
-    */
-  def removedRows(
-      oldSnap: DataFrame,
-      newSnap: DataFrame,
-      keyCol: String,
-      contentCols: Seq[String]): DataFrame =
-    oldSnap.join(
-      removedKeys(oldSnap, newSnap, keyCol, contentCols),
-      Seq(keyCol), "left_semi")
 }

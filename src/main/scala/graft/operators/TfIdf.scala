@@ -101,7 +101,6 @@ object TfIdf {
       topK: Int = 20): DataFrame = {
     require(terms.nonEmpty, "bm25Rank: empty query-term list")
     require(terms.distinct == terms, "bm25Rank: duplicate query terms")
-    val tfCols = terms.indices.map(i => s"tf_$i")
     val base = docs
       .filter(col(textCol).isNotNull)
       .select(

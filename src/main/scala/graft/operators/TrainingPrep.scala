@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.functions.TextFunctions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 

@@ -356,8 +356,9 @@ final class IrcLineClient(
 
   override def run(): Unit = {
     while (!closed) {
+      var s: Socket = null
       try {
-        val s = new Socket(host, port)
+        s = new Socket(host, port)
         socket = s
         val out = new PrintWriter(s.getOutputStream, true)
         val in = new BufferedReader(
@@ -372,8 +373,13 @@ final class IrcLineClient(
           line = in.readLine()
         }
       } catch {
-        case _: Exception if !closed => Thread.sleep(200) // reconnect
+        case _: Exception => () // reconnect below, unless closed
+      } finally {
+        if (s != null) { try s.close() catch { case _: Exception => () } }
       }
+      // pause after every disconnect, a clean server close included, so
+      // a server that drops each connection is not redialled in a loop
+      if (!closed) Thread.sleep(200)
     }
   }
 

@@ -387,342 +387,6 @@ class SimilaritySpec extends SparkTestBase {
     assert(single.count(_._3 == 0L) == 30)
   }
 
-  test("persisted IVF-PQ index: partition-pruned probe scan, rows identical to the inline path") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-
-    val embR = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val q = embR.filter(col("vec_id") === 0).select("embedding")
-      .head().getSeq[Float](0).map(_.toDouble)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq-index").toString
-    val (nLists, nProbe) = (16, 4)
-    Similarity.buildIvfPqIndex(
-      embR, "vec_id", "embedding", dir,
-      nLists = nLists, m = 16, nCodes = 64, trainSample = 2048)
-
-    // the artifact is genuinely partitioned by cell on disk
-    val cellDirs = new java.io.File(dir).listFiles().filter(_.getName.startsWith("cell="))
-    assert(cellDirs.length > nProbe, s"expected > $nProbe cell dirs, got ${cellDirs.length}")
-
-    val fromIndex = Similarity.ivfPqTopKFromIndex(
-      spark, dir, embR, "vec_id", "embedding", q, k = 20, nProbe = nProbe, rerank = 100)
-    val gotIndex = fromIndex.as[(Long, Double)].collect().toSeq
-
-    // row-identical (ids, order, AND cosine bits) to the inline path
-    val inline = Similarity.ivfPqTopK(
-      embR, "vec_id", "embedding", q, k = 20,
-      nLists = nLists, nProbe = nProbe, m = 16, nCodes = 64, rerank = 100,
-      trainSample = 2048)
-      .as[(Long, Double)].collect().toSeq
-    assert(gotIndex == inline, s"persisted-index result diverged:\n$gotIndex\nvs inline:\n$inline")
-
-    // plan audit: the code scan carries a PUSHED partition filter on
-    // `cell` and reads exactly the nProbe probed partitions
-    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-      case s: QueryStageExec => scans(s.plan)
-      case f: FileSourceScanExec => Seq(f)
-      case other => other.children.flatMap(scans)
-    }
-    val indexScans = scans(fromIndex.queryExecution.executedPlan)
-      .filter(_.relation.location.rootPaths.exists(_.toString.contains(dir)))
-    assert(indexScans.nonEmpty, fromIndex.queryExecution.executedPlan.toString)
-    val scan = indexScans.head
-    assert(scan.partitionFilters.exists(_.references.exists(_.name == "cell")),
-      s"no partition filter on cell: ${scan.partitionFilters}")
-    val partitionsRead = scan.relation.location
-      .listFiles(scan.partitionFilters, scan.dataFilters).length
-    assert(partitionsRead == nProbe,
-      s"probe scan read $partitionsRead partitions, expected $nProbe")
-  }
-
-  test("IVF-PQ index append: delta encoded with the persisted model, visible to pruned queries") {
-    val embR = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val base = embR.filter(col("vec_id") % 2 === 0)
-    val delta = embR.filter(col("vec_id") % 2 === 1)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq-append").toString
-    Similarity.buildIvfPqIndex(
-      base, "vec_id", "embedding", dir,
-      nLists = 16, m = 16, nCodes = 64, trainSample = 2048)
-    Similarity.appendToIvfPqIndex(delta, "vec_id", "embedding", dir, batchId = 0L)
-    // crash-window replay: re-running the SAME batchId dynamically
-    // overwrites its own (cell, batch) partitions instead of appending
-    // duplicates — the union count below also proves no double rows
-    Similarity.appendToIvfPqIndex(delta, "vec_id", "embedding", dir, batchId = 0L)
-
-    // the union is in the index
-    assert(spark.read.parquet(dir).count() == embR.count())
-
-    // a query FROM the appended half finds itself: the delta was encoded
-    // with the same persisted model the probe routes with
-    val deltaRow = delta.orderBy("vec_id").select("vec_id", "embedding").head()
-    val (qid, q) = (deltaRow.getLong(0), deltaRow.getSeq[Float](1).map(_.toDouble))
-    val top = Similarity.ivfPqTopKFromIndex(
-      spark, dir, embR, "vec_id", "embedding", q, k = 5, nProbe = 4, rerank = 100)
-      .as[(Long, Double)].collect()
-    assert(top.head._1 == qid && math.abs(top.head._2 - 1.0) < 1e-9,
-      s"appended row $qid not recovered as its own nearest neighbor: ${top.toSeq}")
-  }
-
-  test("removeFromIvfPqIndex: retired ids gone, survivors equal a same-model append; replay no-op") {
-    val embR = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val dirA = java.nio.file.Files.createTempDirectory("graft-ivfpq-rm").toString + "/index"
-    Similarity.buildIvfPqIndex(
-      embR, "vec_id", "embedding", dirA,
-      nLists = 16, m = 16, nCodes = 64, trainSample = 2048)
-    val removedIds = embR.filter(col("vec_id") % 5 === 0).select("vec_id")
-    val removedSet = removedIds.as[Long].collect().toSet
-    def rows(dir: String): Set[(Long, Long, Seq[Byte])] =
-      spark.read.parquet(dir).select("id", "cell", "code")
-        .as[(Long, Long, Array[Byte])].collect().map(r => (r._1, r._2, r._3.toSeq)).toSet
-    val before = rows(dirA)
-
-    Similarity.removeFromIvfPqIndex(spark, dirA, removedIds, "vec_id")
-    // tombstone shape: the code artifact is NOT rewritten at retire
-    // time — physical rows survive until compaction folds the sidecar
-    assert(rows(dirA) == before,
-      "tombstone retire rewrote the code artifact (should be sidecar-only)")
-
-    // query parity: the retired index answers exactly like an index
-    // whose SURVIVORS were appended under the SAME model (cells/codes
-    // are a property of the model, not of corpus membership)
-    val dirB = java.nio.file.Files.createTempDirectory("graft-ivfpq-rm-b").toString + "/index"
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fsB = new org.apache.hadoop.fs.Path(dirB).getFileSystem(conf)
-    assert(org.apache.hadoop.fs.FileUtil.copy(
-      fsB, new org.apache.hadoop.fs.Path(s"$dirA/${Similarity.ivfPqModelDirName}"),
-      fsB, new org.apache.hadoop.fs.Path(s"$dirB/${Similarity.ivfPqModelDirName}"), false, conf))
-    Similarity.appendToIvfPqIndex(
-      embR.filter(col("vec_id") % 5 =!= 0), "vec_id", "embedding", dirB, batchId = 0L)
-    val q = embR.filter(col("vec_id") === 1).select("embedding")
-      .head().getSeq[Float](0).map(_.toDouble)
-    def top(dir: String): Seq[(Long, Double)] =
-      Similarity.ivfPqTopKFromIndex(
-        spark, dir, embR, "vec_id", "embedding", q, k = 10, nProbe = 4, rerank = 50)
-        .as[(Long, Double)].collect().toSeq
-    val gotA = top(dirA)
-    assert(gotA.forall(r => !removedSet(r._1)), s"retired id served from the index: $gotA")
-    assert(gotA == top(dirB), "retired index diverged from the same-model survivor append")
-
-    // kNN-join parity through the mask: retired ids never become
-    // candidates, and results equal the survivor-append index's
-    val queries = embR.filter(col("vec_id").isin(1L, 7L))
-      .select(col("vec_id").alias("qid"), col("embedding").alias("qvec"))
-    def knn(dir: String): Set[(Long, Long, Double)] =
-      Similarity.knnJoinFromIndex(
-        spark, dir, embR, "vec_id", "embedding", queries, "qid", "qvec",
-        k = 8, nProbe = 4)
-        .as[(Long, Long, Double)].collect().toSet
-    val knnA = knn(dirA)
-    assert(knnA.forall(r => !removedSet(r._2)), s"retired id in kNN join: $knnA")
-    assert(knnA == knn(dirB), "kNN join through tombstones diverged from survivor append")
-
-    // idempotent at the semantics level: a crash-replay of the removal
-    // changes neither the artifact nor any answer
-    Similarity.removeFromIvfPqIndex(spark, dirA, removedIds, "vec_id")
-    assert(rows(dirA) == before && top(dirA) == gotA, "replayed removal not a no-op")
-
-    // compaction folds the tombstones: NOW the physical rows go, the
-    // sidecar is consumed, and every answer is unchanged
-    Similarity.compactIvfPqIndex(spark, dirA)
-    assert(rows(dirA) == before.filterNot(r => removedSet(r._1)),
-      "compaction did not fold the tombstones into the rewrite")
-    assert(!new java.io.File(dirA, "_graft_tombstones").exists(),
-      "compacted artifact still carries the tombstone sidecar")
-    assert(top(dirA) == gotA && knn(dirA) == knnA,
-      "answers changed when the tombstones folded")
-
-    // compactNow = the pre-tombstone eager behavior: physical purge in
-    // the retire call itself
-    val dirC = java.nio.file.Files.createTempDirectory("graft-ivfpq-rm-c").toString + "/index"
-    Similarity.buildIvfPqIndex(
-      embR, "vec_id", "embedding", dirC,
-      nLists = 16, m = 16, nCodes = 64, trainSample = 2048)
-    Similarity.removeFromIvfPqIndex(spark, dirC, removedIds, "vec_id", compactNow = true)
-    assert(rows(dirC).forall(r => !removedSet(r._1)),
-      "compactNow retire left retired rows in the artifact")
-
-    // retiring EVERY row then folding leaves a model-only artifact —
-    // queries must answer empty, not crash on schema inference
-    Similarity.removeFromIvfPqIndex(
-      spark, dirC, embR.select("vec_id"), "vec_id", compactNow = true)
-    assert(top(dirC).isEmpty, "fully-retired index did not answer empty top-k")
-    assert(knn(dirC).isEmpty, "fully-retired index did not answer empty kNN join")
-    // and compacting the empty artifact again is a quiet no-op
-    Similarity.compactIvfPqIndex(spark, dirC)
-    assert(top(dirC).isEmpty)
-  }
-
-  test("compactIvfPqIndex: deltas collapse to one batch=-1 file per cell; queries row-identical; replay no-op") {
-    val embR = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq-compact").toString + "/index"
-    Similarity.buildIvfPqIndex(
-      embR.filter(col("vec_id") % 3 === 0), "vec_id", "embedding", dir,
-      nLists = 8, m = 8, nCodes = 16, trainSample = 512)
-    Similarity.appendToIvfPqIndex(
-      embR.filter(col("vec_id") % 3 === 1), "vec_id", "embedding", dir, batchId = 0L)
-    Similarity.appendToIvfPqIndex(
-      embR.filter(col("vec_id") % 3 === 2), "vec_id", "embedding", dir, batchId = 1L)
-
-    def rows: Set[(Long, Int, Seq[Byte])] = spark.read.parquet(dir)
-      .select("id", "cell", "code").as[(Long, Int, Array[Byte])]
-      .collect().map(r => (r._1, r._2, r._3.toSeq)).toSet
-    def batchDirs: Seq[(String, Int)] = {
-      val root = new java.io.File(dir)
-      for {
-        c <- root.listFiles().toSeq if c.isDirectory && c.getName.startsWith("cell=")
-        b <- c.listFiles().toSeq if b.isDirectory
-      } yield (s"${c.getName}/${b.getName}",
-        b.listFiles().count(f => f.getName.endsWith(".parquet")))
-    }
-    val q = embR.filter(col("vec_id") === 1).select("embedding")
-      .head().getSeq[Float](0).map(_.toDouble)
-    def top: Seq[(Long, Double)] = Similarity.ivfPqTopKFromIndex(
-      spark, dir, embR, "vec_id", "embedding", q, k = 10, nProbe = 4, rerank = 100)
-      .as[(Long, Double)].collect().toSeq
-
-    val (rowsBefore, topBefore) = (rows, top)
-    assert(batchDirs.exists(!_._1.endsWith("batch=-1")), "no delta partitions to compact")
-
-    Similarity.compactIvfPqIndex(spark, dir)
-    val after = batchDirs
-    assert(after.forall(_._1.endsWith("batch=-1")), s"deltas survived: $after")
-    assert(after.forall(_._2 == 1), s"cells not single-file: $after")
-    assert(rows === rowsBefore, "compaction changed index content")
-    assert(top === topBefore, "pruned query diverged after compaction")
-
-    // replay: compacting a compacted artifact is a content no-op
-    Similarity.compactIvfPqIndex(spark, dir)
-    assert(batchDirs.forall(d => d._1.endsWith("batch=-1") && d._2 == 1))
-    assert(rows === rowsBefore && top === topBefore, "re-compaction not a no-op")
-
-    // guard: a path with no artifact fails loud
-    val e = intercept[IllegalArgumentException] {
-      Similarity.compactIvfPqIndex(spark, dir + "-nope")
-    }
-    assert(e.getMessage.contains("no IVF-PQ artifact"), e.getMessage)
-
-    // crash-window recovery: strand the artifact the way a crash
-    // between the swap renames would; the next index open (the model
-    // read every consumer shares) heals it, losing nothing
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stranded = new org.apache.hadoop.fs.Path(
-      root.getParent, s".${root.getName}_compact_old_999")
-    assert(fs.rename(root, stranded))
-    assert(top === topBefore, "crash-window recovery lost the index")
-    assert(fs.exists(root) && !fs.exists(stranded))
-  }
-
-  test("appendToIvfPqIndex refuses a legacy cell-only artifact instead of bricking it") {
-    // parquet files directly under cell= (the pre-batch layout): a
-    // two-level append would succeed and only explode at QUERY time
-    // with conflicting directory structures — the guard fails the
-    // append itself
-    val dir = java.nio.file.Files.createTempDirectory("graft-legacy-idx").toString
-    val cellDir = new java.io.File(dir, "cell=0")
-    assert(cellDir.mkdirs())
-    assert(new java.io.File(cellDir, "part-00000.parquet").createNewFile())
-    val delta = Seq((1L, Seq(0.1f, 0.2f))).toDF("vec_id", "embedding")
-    val e = intercept[IllegalArgumentException] {
-      Similarity.appendToIvfPqIndex(delta, "vec_id", "embedding", dir, batchId = 0L)
-    }
-    assert(e.getMessage.contains("legacy cell-only layout"), e.getMessage)
-  }
-
-  test("index writes drop null vectors and fail loud PER ROW on a mixed-dim delta") {
-    val embR = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val dim = embR.select("embedding").head().getSeq[Float](0).length
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq-guard").toString
-    Similarity.buildIvfPqIndex(
-      embR, "vec_id", "embedding", dir, nLists = 8, m = 16, nCodes = 16, trainSample = 512)
-    val total = spark.read.parquet(dir).count()
-
-    // null vectors never land as default-partition junk rows: the
-    // append count grows by exactly the non-null rows
-    val withNull = Seq(
-      (900001L, Some(Seq.fill(dim)(0.5f))),
-      (900002L, Option.empty[Seq[Float]])).toDF("vec_id", "embedding")
-    Similarity.appendToIvfPqIndex(withNull, "vec_id", "embedding", dir, batchId = 1L)
-    assert(spark.read.parquet(dir).count() == total + 1,
-      "null-vector row leaked into the index artifact")
-    assert(!new java.io.File(dir).listFiles().exists(_.getName.contains("HIVE_DEFAULT")),
-      "null cell partition written")
-
-    // a delta whose FIRST row has the right dim but a later row is wider
-    // must fail (the old sampled-row guard would have silently
-    // prefix-encoded the wide row)
-    val mixed = Seq(
-      (900003L, Seq.fill(dim)(0.1f)),
-      (900004L, Seq.fill(dim + 4)(0.2f))).toDF("vec_id", "embedding")
-    val e = intercept[Exception] {
-      Similarity.appendToIvfPqIndex(mixed, "vec_id", "embedding", dir, batchId = 2L)
-    }
-    def causes(t: Throwable): Seq[Throwable] =
-      if (t == null) Nil else t +: causes(t.getCause)
-    assert(causes(e).exists(c => Option(c.getMessage).exists(_.contains("!= index dim"))),
-      s"expected the per-row dim error, got: $e")
-  }
-
-  test("knnJoinFromIndex: rows identical to the inline join; scan pruned to the probed-cell union") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-
-    val embR = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("graft-knn-index").toString
-    val (nLists, nProbe, k) = (16, 3, 5)
-    Similarity.buildIvfPqIndex(
-      embR, "vec_id", "embedding", dir,
-      nLists = nLists, m = 16, nCodes = 64, trainSample = 2048)
-
-    val queries = embR.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val fromIndex = Similarity.knnJoinFromIndex(
-      spark, dir, embR, "vec_id", "embedding", queries, "qid", "qvec", k, nProbe)
-    val gotIndex = fromIndex.as[(Long, Long, Double)].collect()
-      .sortBy(r => (r._1, r._2)).toSeq
-
-    // the reopened model is bit-exact, so the inline join over the SAME
-    // persisted centroids must return identical rows (ids AND cos bits)
-    val (centroids, _) = Similarity.readIvfPqModel(spark, dir)
-    val inline = Similarity.knnJoinWithCentroids(
-      embR, "vec_id", "embedding", queries, "qid", "qvec", k, nProbe, centroids)
-      .as[(Long, Long, Double)].collect().sortBy(r => (r._1, r._2)).toSeq
-    assert(gotIndex == inline, s"index join diverged:\n$gotIndex\nvs inline:\n$inline")
-
-    // the index scan reads exactly the probed-cell UNION's partitions —
-    // strictly fewer than the full artifact
-    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-      case s: QueryStageExec => scans(s.plan)
-      case f: FileSourceScanExec => Seq(f)
-      case other => other.children.flatMap(scans)
-    }
-    val indexScans = scans(fromIndex.queryExecution.executedPlan)
-      .filter(_.relation.location.rootPaths.exists(_.toString.contains(dir)))
-    assert(indexScans.nonEmpty, fromIndex.queryExecution.executedPlan.toString)
-    val scan = indexScans.head
-    assert(scan.partitionFilters.exists(_.references.exists(_.name == "cell")),
-      s"no partition filter on cell: ${scan.partitionFilters}")
-    // Spark ALSO inserts a dynamic-pruning subquery from the cell join;
-    // it can't be evaluated outside execution, so count partitions under
-    // the static pushed filter alone (the deterministic pruning bound)
-    val staticFilters = scan.partitionFilters.filterNot(_.exists(
-      _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.DynamicPruningExpression]))
-    assert(staticFilters.exists(_.references.exists(_.name == "cell")),
-      s"no STATIC partition filter on cell: ${scan.partitionFilters}")
-    val partitionsRead = scan.relation.location
-      .listFiles(staticFilters, scan.dataFilters).length
-    val cellDirs = new java.io.File(dir).listFiles().count(_.getName.startsWith("cell="))
-    val unionCells = queries
-      .select(org.apache.spark.sql.functions.explode(
-        graft.functions.expressions.NearestCellsExpr
-          .nearestCells(col("qvec"), centroids, nProbe)).as("cell"))
-      .distinct().count().toInt
-    assert(partitionsRead == unionCells && partitionsRead < cellDirs,
-      s"read $partitionsRead partitions, union=$unionCells, total=$cellDirs")
-  }
-
   test("nearest_cells: ascending by distance, head = nearest_cell, ties to lowest index") {
     // centroid 3 duplicates centroid 0 — exact-tie pairs must order 0 before 3
     val cents = Array(
@@ -914,7 +578,7 @@ class SimilaritySpec extends SparkTestBase {
 
   test("pipeline composition: chunk embeddings -> mean-pool -> IVF-PQ index -> pruned query") {
     // 6 docs x 5 chunks, chunk vectors = doc direction + small noise;
-    // the pooled doc vectors feed the persisted-index path end to end
+    // the pooled doc vectors feed the inline IVF-PQ path end to end
     val rnd = new scala.util.Random(5)
     val dirs = Array.tabulate(6)(d => Array.tabulate(8)(j => if (j == d) 1.0 else 0.0))
     val chunks = for { d <- 0 until 6; c <- 0 until 5 } yield (
@@ -928,14 +592,12 @@ class SimilaritySpec extends SparkTestBase {
         col("pooled").cast("array<float>").alias("embedding"))
     assert(pooled.count() == 6)
 
-    val dir = java.nio.file.Files.createTempDirectory("graft-pool-idx").toString + "/index"
-    Similarity.buildIvfPqIndex(pooled, "doc_id", "embedding", dir,
-      nLists = 3, m = 4, nCodes = 4, trainSample = 64)
     // query with doc 4's clean direction: the pooled vector denoises
     // the chunk jitter, so doc 4 must rank first
-    val top = Similarity.ivfPqTopKFromIndex(
-      spark, dir, pooled, "doc_id", "embedding", dirs(4).toSeq,
-      k = 3, nProbe = 3, rerank = 6)
+    val top = Similarity.ivfPqTopK(
+      pooled, "doc_id", "embedding", dirs(4).toSeq,
+      k = 3, nLists = 3, nProbe = 3, m = 4, nCodes = 4, rerank = 6,
+      trainSample = 64)
       .as[(Long, Double)].collect()
     assert(top.head._1 == 4L, s"pooled ANN lost the target doc: ${top.toSeq}")
     assert(top.head._2 > 0.99, s"pooled vector should align with its direction: ${top.head}")

@@ -278,6 +278,40 @@ class TwitchIrcSourceSpec extends SparkTestBase {
     }
   }
 
+  test("a server that closes every connection cleanly is redialled at a bounded rate") {
+    val server = new ServerSocket(0)
+    val connections = new java.util.concurrent.atomic.AtomicInteger(0)
+    val serverThread = new Thread(() => {
+      while (!server.isClosed) {
+        try {
+          val s = server.accept()
+          connections.incrementAndGet()
+          // read the handshake first, so the close is a clean EOF on the
+          // client (readLine returns null), not a reset
+          val in = new BufferedReader(new InputStreamReader(s.getInputStream, StandardCharsets.UTF_8))
+          in.readLine(); in.readLine(); in.readLine() // PASS/NICK/JOIN
+          s.close()
+        } catch { case _: Exception => () }
+      }
+    })
+    serverThread.setDaemon(true)
+    serverThread.start()
+
+    val client = new IrcLineClient(
+      "127.0.0.1", server.getLocalPort, "#c", "nick", "oauth:x", _ => ())
+    client.start()
+    try {
+      Thread.sleep(2000)
+      val n = connections.get()
+      // a 200 ms pause per disconnect allows ~10 connects in 2 s
+      assert(n >= 2, s"client never reconnected ($n connects)")
+      assert(n <= 20, s"client redialled $n times in 2 s without pausing")
+    } finally {
+      client.close()
+      server.close()
+    }
+  }
+
   test("JOIN names the channel with a '#' whether or not the option has one") {
     val server = new ServerSocket(0)
     val handshake = new ConcurrentLinkedQueue[String]()
